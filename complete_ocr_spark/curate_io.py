@@ -26,17 +26,25 @@ plan is the price of global dedup; rewriting finished output is not.
 
 from __future__ import annotations
 
-import hashlib
-import json
 import os
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 from .config import DEFAULT_N_BUCKETS
 from .functions.curate import curate_corpus
 from .functions.dedup import strip_dup_chunks, strip_dup_segments
-from .io import has_parquet, require_local, with_bucket
-from .streaming.dedup_stream import _geometry_guard
+from .io import (
+    bucket_lineage,
+    completed_buckets,
+    geometry_guard,
+    pending_buckets,
+    read_written,
+    require_local,
+    weights_fingerprint,
+    with_bucket,
+    write_lineage,
+    write_partitioned,
+)
 
 # curate_kwargs that do not change the curation DECISIONS (or cannot be
 # fingerprinted): excluded from the persisted geometry so a resume under a
@@ -59,6 +67,23 @@ def curated_paths(out_root: str) -> tuple[str, str, str]:
         os.path.join(out_root, "audit"),
         os.path.join(out_root, "curated_lineage"),
     )
+
+
+def curate_kwargs_geometry(curate_kwargs: dict) -> dict:
+    """The geometry keys a curate_corpus kwargs dict contributes to a batch
+    output's sidecar (write_curated, prep_io.write_training_data): the
+    optional tiers' presence, the model gate's weight identity, and every
+    fingerprintable kwarg (module constant ``_GEOMETRY_EXCLUDED``)."""
+    clf = curate_kwargs.get("clf_weights")
+    return {
+        "semantic": curate_kwargs.get("embeddings") is not None,
+        "media_tier": curate_kwargs.get("doc_media") is not None,
+        "clf": None if clf is None else {
+            "n_buckets": len(clf), "fingerprint": weights_fingerprint(clf),
+        },
+        **{k: v for k, v in sorted(curate_kwargs.items())
+           if k not in _GEOMETRY_EXCLUDED},
+    }
 
 
 def write_curated(spark: SparkSession, docs: DataFrame, out_root: str,
@@ -86,44 +111,22 @@ def write_curated(spark: SparkSession, docs: DataFrame, out_root: str,
     # thresholds match the run that wrote those buckets — a silent mismatch
     # would anti-join new bucket ids against old ones and leave a training
     # table whose partitions were produced under inconsistent parameters.
-    # Persist the decision-relevant parameters next to the output and refuse
-    # loudly on any difference (the dedup-store _geometry_guard contract,
-    # under curate_io's own sidecar name). JSON round-trip normalizes tuples
-    # (languages=) to lists so the comparison is representation-stable.
-    geometry = json.loads(json.dumps({
+    geometry_guard(out_root, {
         "kind": "curated",
         "n_buckets": n_buckets,
         "segment_scheme": segment_scheme,
         "seg_win": seg_win, "seg_stride": seg_stride,
         "cdc_avg_chunk": cdc_avg_chunk, "cdc_min_tokens": cdc_min_tokens,
         "cdc_window_k": cdc_window_k,
-        "semantic": curate_kwargs.get("embeddings") is not None,
-        "media_tier": curate_kwargs.get("doc_media") is not None,
-        # model gate (round 8): pin the weight ARTIFACT's identity, not the
-        # list (a 2^20-bucket table would bloat the sidecar unreadable)
-        "clf": None if curate_kwargs.get("clf_weights") is None else {
-            "n_buckets": len(curate_kwargs["clf_weights"]),
-            "fingerprint": hashlib.md5(",".join(
-                str(int(w)) for w in curate_kwargs["clf_weights"]
-            ).encode()).hexdigest(),
-        },
-        **{k: v for k, v in sorted(curate_kwargs.items())
-           if k not in _GEOMETRY_EXCLUDED},
-    }))
-    _geometry_guard(out_root, geometry, filename="_curated_geometry.json")
+        **curate_kwargs_geometry(curate_kwargs),
+    }, filename="_curated_geometry.json")
 
     def _bucket(df):
         # io.with_bucket — ONE copy of the bucket rule keeps curated buckets
         # aligned with docs_out buckets forever
         return with_bucket(df, n_buckets, id_col=id_col)
 
-    # resume probe: buckets with a lineage row are complete. has_parquet,
-    # not exists — a crash DURING the lineage write leaves the directory
-    # present but file-less, and resume must re-run, not wedge on schema
-    # inference
-    done = None
-    if has_parquet(lin_path):
-        done = spark.read.parquet(lin_path).select("bucket").distinct()
+    done = completed_buckets(spark, lin_path)
     curated = curate_corpus(
         docs, id_col, text_col,
         segment_scheme=segment_scheme, seg_win=seg_win,
@@ -148,71 +151,19 @@ def write_curated(spark: SparkSession, docs: DataFrame, out_root: str,
     if "model_quality_micros" in curated.columns:  # model tier on: ditto
         audit_cols.insert(audit_cols.index("keep"), "model_quality_micros")
     audit = _bucket(curated.select(id_col, *audit_cols))
-    if done is not None:
-        # global decisions, pruned writes: only pending buckets are written
-        training = training.join(F.broadcast(done), "bucket", "left_anti")
-        audit = audit.join(F.broadcast(done), "bucket", "left_anti")
-    if fail_after_buckets is not None:
-        keep_b = [
-            r["bucket"]
-            for r in audit.select("bucket").distinct()
-            .orderBy("bucket").collect()
-        ][:fail_after_buckets]
-        training = training.filter(F.col("bucket").isin(keep_b))
-        audit = audit.filter(F.col("bucket").isin(keep_b))
-    if audit.isEmpty():
+    # global decisions, pruned writes: only pending buckets are written
+    pending = pending_buckets([audit, training], done, fail_after_buckets)
+    if pending is None:
         return {"docs_in": 0, "kept": 0, "buckets_written": 0, "skipped": True}
+    audit, training = pending
     for frame, path in ((training, train_path), (audit, audit_path)):
-        (
-            frame.repartition(n_buckets, "bucket")
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("bucket")
-            .parquet(path)
-        )
-    # lineage from the files just written (one cheap scan), this run's
-    # buckets only; <= n_buckets rows collected driver-side. The audit side
-    # drives (every input doc has an audit row, so every written bucket gets
-    # a lineage row even when it kept zero docs); the training side may have
-    # written NO files at all (all docs dropped) — the empty-output guard
-    # TableIO.write documents, re-applied here before the read-back.
-    audit_back = spark.read.parquet(audit_path)
-    if done is not None:
-        audit_back = audit_back.join(F.broadcast(done), "bucket", "left_anti")
-    lin = audit_back.groupBy("bucket").agg(
-        F.min(id_col).alias("doc_range_min"),
-        F.max(id_col).alias("doc_range_max"),
-        F.count("*").alias("doc_count"),
-        F.sum(F.when(F.col("keep"), 1).otherwise(0)).alias("kept_count"),
-    )
-    if has_parquet(train_path):
-        back = spark.read.parquet(train_path)
-        if done is not None:
-            back = back.join(F.broadcast(done), "bucket", "left_anti")
-        lin = lin.join(
-            back.withColumn(
-                "h", F.xxhash64(F.col(id_col), F.col("text_clean"))
-            )
-            .groupBy("bucket")
-            .agg(
-                F.sum("n_kept").alias("token_count"),
-                F.expr("bit_xor(h)").alias("checksum"),
-            ),
-            "bucket", "left",
-        )
-    else:
-        lin = lin.withColumn(
-            "token_count", F.lit(None).cast("bigint")
-        ).withColumn("checksum", F.lit(None).cast("bigint"))
-    rows = lin.collect()
-    if rows:
-        (
-            spark.createDataFrame(rows, lin.schema)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("bucket")
-            .parquet(lin_path)
-        )
+        write_partitioned(frame.repartition(n_buckets, "bucket"), path,
+                          "bucket")
+    rows = write_lineage(spark, lin_path, bucket_lineage(
+        read_written(spark, audit_path, done),
+        read_written(spark, train_path, done),  # None: all docs dropped
+        id_col, "text_clean", "n_kept",
+    ))
     return {
         "docs_in": sum(r["doc_count"] for r in rows),
         "kept": sum(r["kept_count"] for r in rows),

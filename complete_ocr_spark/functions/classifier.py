@@ -264,8 +264,9 @@ def train_hashed_classifier(
     history: list[dict] = []
     for it in range(int(n_iters)):
         if int(val_bp) > 0:
-            # score train+val in ONE corpus pass; gradients filter the
-            # checkpointed scored frame to the train slice
+            # score train+val in ONE corpus pass; gradients filter this
+            # scored projection of the checkpointed `feats` to the train
+            # slice (scored_all itself is not checkpointed)
             scored_all = _margin_and_err(feats, w, sig, z_max_micros)
             stats = _stats_split(scored_all)
             row = {

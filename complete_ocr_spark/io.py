@@ -1,4 +1,4 @@
-"""TableIO: checkpoint-restartable writes with per-partition lineage.
+"""The engine's one storage sink: partitioned writes, lineage, resume, guards.
 
 The reference's resumability is "skip PDF→image if Images/ non-empty"
 (optimized_code/main.py:67-69) and its run metadata is a wall-clock print
@@ -10,13 +10,21 @@ overwrite* (idempotent — a re-run of a bucket replaces it byte-for-byte);
 restart left-anti-joins docs against completed buckets (broadcast — lineage is
 tiny) so finished work is pruned at the scan.
 
-Locally parquet-backed; on a real cluster the same calls map to
-``spark.read/writeTo("iceberg.db.docs_out")`` with identity-partitioning on
-bucket (no Iceberg runtime jar in this sandbox — verified /opt/spark/jars).
+This module is the engine's single sink: every partitioned store write in
+the package (batch tables and streaming stores) goes through
+``write_partitioned``, the one place that knows the storage format and the
+overwrite policy. Locally that is parquet; on a real cluster it and the reads
+map to ``spark.read/writeTo("iceberg.db.<table>")`` with identity
+partitioning on the same columns (this build has no Iceberg runtime jar), and
+nothing else changes. The curated outputs share ``bucket_lineage`` and the
+resume path below with ``TableIO``; every store sidecar shares
+``geometry_guard``.
 """
 
 from __future__ import annotations
 
+import hashlib
+import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -73,20 +81,101 @@ def parallel_actions(*thunks) -> None:
 
     ONLY for actions with no read/write dependence on each other's outputs
     (each streaming body documents its grouping at the call site). Spark's
-    scheduler handles concurrent jobs natively (FIFO back-fill); any thunk
-    exception re-raises here after all threads finish, so a failed write
-    still fails the batch."""
+    scheduler handles concurrent jobs natively (FIFO back-fill). At most 3
+    run at once — no caller passes more, and a longer list queues instead
+    of starting one driver thread per thunk. Any thunk exception re-raises
+    here after all threads finish, so a failed write still fails the
+    batch."""
     if len(thunks) == 1:
         thunks[0]()
         return
     from concurrent.futures import ThreadPoolExecutor
 
-    with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
+    with ThreadPoolExecutor(max_workers=min(len(thunks), 3)) as pool:
         futures = [pool.submit(t) for t in thunks]
     errs = [f.exception() for f in futures]
     for e in errs:
         if e is not None:
             raise e
+
+
+def write_partitioned(df: DataFrame, path: str, *cols: str) -> None:
+    """The one partitioned store write: ``df`` replaces exactly the
+    partitions of ``path`` (by ``cols``) it holds rows for, so a re-run or
+    a re-delivered micro-batch is idempotent. The caller sets the file
+    layout (``repartition(n, key)`` / ``coalesce(1)``) on ``df``.
+
+    Dynamic overwrite is a per-write option, NOT ``spark.conf.set``:
+    foreachBatch runs under a cloned micro-batch session whose conf
+    snapshot ignores later driver conf mutations, so a session setting
+    silently degrades to static overwrite (wiping prior partitions)."""
+    (
+        df.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(*cols)
+        .parquet(path)
+    )
+
+
+def weights_fingerprint(*tables) -> str:
+    """md5 over one or more integer weight tables (``|``-separated): pins a
+    model artifact's identity in a geometry sidecar without storing the
+    table itself (a 2^20-bucket table would make the sidecar unreadable)."""
+    return hashlib.md5("|".join(
+        ",".join(str(int(w)) for w in t) for t in tables
+    ).encode()).hexdigest()
+
+
+def geometry_guard(out_root: str, geometry: dict,
+                   filename: str = "_dedup_geometry.json") -> None:
+    """Persist a store's decision-relevant parameters next to it on first
+    use; refuse to run under a DIFFERENT geometry — probing or resuming a
+    store built under other parameters (banding, bucket count, thresholds,
+    model weights) silently mixes incompatible key or decision spaces.
+
+    ``geometry`` is compared after a JSON round trip (tuples become
+    lists), i.e. exactly as it will read back from the sidecar. The error
+    names the store — its ``kind``, or the sidecar filename when the
+    geometry has none — and every key that differs.
+
+    One ADDITIVE upgrade is allowed: a dedup store written before cluster
+    maintenance existed lacks the 'n_doc_buckets' key; enabling clusters on
+    it only adds that key (the banding key space is unchanged), so the
+    stored geometry is upgraded in place — the missing cluster log itself
+    is then rebuilt by ``dedup_stream._rebuild_cluster_log``."""
+    geometry = json.loads(json.dumps(geometry))
+    path = os.path.join(out_root, filename)
+    if os.path.exists(path):
+        try:
+            with open(path) as f:
+                stored = json.load(f)
+        except ValueError:
+            stored = None  # crash mid-write left a truncated file: rewrite it
+        if stored is not None:
+            additive_upgrade = (
+                stored != geometry
+                and set(geometry) - set(stored) == {"n_doc_buckets"}
+                and {k: geometry[k] for k in stored} == stored
+            )
+            if stored != geometry and not additive_upgrade:
+                diff = ", ".join(
+                    f"{k}: {stored.get(k)!r} -> {geometry.get(k)!r}"
+                    for k in sorted(set(stored) | set(geometry))
+                    if stored.get(k) != geometry.get(k)
+                )
+                store = geometry.get("kind") or stored.get("kind") or filename
+                raise ValueError(
+                    f"{store} geometry mismatch at {out_root}: the store was "
+                    f"built with different parameters ({diff}); rebuild it "
+                    "or restore the original parameters"
+                )
+            if not additive_upgrade:
+                return  # exact match: nothing to rewrite
+    os.makedirs(out_root, exist_ok=True)
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        json.dump(geometry, f)
+    os.replace(tmp, path)  # atomic: no truncated file survives a crash
 
 
 def doc_checksum() -> F.Column:
@@ -110,6 +199,105 @@ def lineage_rows(docs_out_bucketed: DataFrame) -> DataFrame:
     )
 
 
+def bucket_lineage(audit: DataFrame, training: DataFrame | None,
+                   id_col: str, text_col: str,
+                   token_col: str) -> DataFrame:
+    """Per-bucket lineage of a curated output: (bucket, doc_range_min,
+    doc_range_max, doc_count, kept_count, token_count, checksum). Audit rows
+    drive, so a bucket that kept nothing still gets a row. ``training`` is
+    None when nothing was kept (no files written); token_count and the
+    xor-combined (id, text) checksum are then NULL."""
+    lin = audit.groupBy("bucket").agg(
+        F.min(id_col).alias("doc_range_min"),
+        F.max(id_col).alias("doc_range_max"),
+        F.count("*").alias("doc_count"),
+        F.sum(F.when(F.col("keep"), 1).otherwise(0)).alias("kept_count"),
+    )
+    if training is None:
+        return lin.withColumn(
+            "token_count", F.lit(None).cast("bigint")
+        ).withColumn("checksum", F.lit(None).cast("bigint"))
+    return lin.join(
+        training.withColumn("h", F.xxhash64(F.col(id_col), F.col(text_col)))
+        .groupBy("bucket")
+        .agg(
+            F.sum(token_col).alias("token_count"),
+            F.expr("bit_xor(h)").alias("checksum"),
+        ),
+        "bucket", "left",
+    )
+
+
+# --- the one resume path -----------------------------------------------------
+# A bucketed batch output is complete per bucket once its lineage row exists.
+# A run reads the completed set once (completed_buckets), prunes its frames to
+# the rest (pending_buckets), writes them with write_partitioned, computes
+# lineage over what it just wrote minus the completed set (read_written), and
+# records it last (write_lineage): a crash anywhere before that re-runs the
+# bucket, and the dynamic overwrite makes the re-run idempotent.
+
+def completed_buckets(spark: SparkSession,
+                      lineage_path: str) -> DataFrame | None:
+    """Buckets with a lineage row, or None when there are none. has_parquet,
+    not exists: a crash DURING the lineage write leaves the directory
+    present but file-less, and resume must re-run, not wedge on schema
+    inference."""
+    if not has_parquet(lineage_path):
+        return None
+    return spark.read.parquet(lineage_path).select("bucket").distinct()
+
+
+def _exclude(df: DataFrame, done: DataFrame | None) -> DataFrame:
+    # broadcast anti-join: the completed-bucket set is <= n_buckets rows
+    return df if done is None else df.join(F.broadcast(done), "bucket",
+                                           "left_anti")
+
+
+def pending_buckets(frames: list[DataFrame], done: DataFrame | None,
+                    fail_after_buckets: int | None = None
+                    ) -> list[DataFrame] | None:
+    """``frames`` (each with a ``bucket`` column) pruned to the buckets not
+    in ``done``. ``fail_after_buckets`` simulates a mid-job crash for
+    restart tests: only the first k pending buckets of ``frames[0]`` (the
+    frame that covers every bucket) are kept. None when ``frames[0]`` has
+    nothing pending — a limit-1 emptiness probe, not a full count."""
+    frames = [_exclude(f, done) for f in frames]
+    if fail_after_buckets is not None:
+        keep = [
+            r["bucket"]
+            for r in frames[0].select("bucket").distinct()
+            .orderBy("bucket").collect()
+        ][:fail_after_buckets]
+        frames = [f.filter(F.col("bucket").isin(keep)) for f in frames]
+    if frames[0].isEmpty():
+        return None
+    return frames
+
+
+def read_written(spark: SparkSession, path: str,
+                 done: DataFrame | None) -> DataFrame | None:
+    """This run's buckets of a table just written (lineage is computed from
+    the files — one cheap scan — not by re-running the plan). None when the
+    table holds no files: an empty write leaves nothing a read could infer
+    a schema from."""
+    if not has_parquet(path):
+        return None
+    return _exclude(spark.read.parquet(path), done)
+
+
+def write_lineage(spark: SparkSession, lineage_path: str,
+                  lin: DataFrame) -> list:
+    """Collect the per-bucket lineage rows (<= n_buckets, bounded at any
+    scale — run stats come for free) and record them with per-bucket
+    dynamic overwrite, not append: a second write over the same root
+    replaces each touched bucket's row instead of stacking duplicates."""
+    rows = lin.collect()
+    if rows:
+        write_partitioned(spark.createDataFrame(rows, lin.schema),
+                          lineage_path, "bucket")
+    return rows
+
+
 class TableIO:
     """Parquet-backed local implementation of the Iceberg-shaped sink."""
 
@@ -122,67 +310,29 @@ class TableIO:
 
     # --- resume ---------------------------------------------------------
     def completed_buckets(self) -> DataFrame | None:
-        if not os.path.exists(self.lineage_path):
-            return None
-        return self.spark.read.parquet(self.lineage_path).select("bucket").distinct()
-
-    def filter_pending(self, docs: DataFrame) -> DataFrame:
-        """Prune documents in already-completed buckets (J3 broadcast anti-join)."""
-        docs = with_bucket(docs, self.n_buckets)
-        done = self.completed_buckets()
-        if done is None:
-            return docs
-        return docs.join(F.broadcast(done), "bucket", "left_anti")
+        return completed_buckets(self.spark, self.lineage_path)
 
     # --- write ----------------------------------------------------------
     def write(self, docs_out: DataFrame,
               exclude_buckets: DataFrame | None = None) -> dict:
-        """Idempotent per-bucket overwrite + lineage append.
+        """Idempotent per-bucket overwrite + lineage (the resume path above).
 
         The extraction DAG executes exactly once (the parquet write); lineage
-        is then computed from the files just written — one cheap scan of the
-        output instead of a second full pipeline execution. The per-bucket
-        lineage rows are collected driver-side (<= n_buckets rows, bounded at
-        any scale) so run stats come for free with no extra action.
-
-        ``exclude_buckets`` (bucket DataFrame) limits lineage to this run's
-        buckets when the output directory already holds completed ones.
+        is then computed from the files just written. ``exclude_buckets``
+        (bucket DataFrame) limits lineage to this run's buckets when the
+        output directory already holds completed ones. A write that produced
+        no files (empty input) records no lineage.
         Returns {'doc_count', 'span_count', 'buckets'} for the written set.
-
-        Lineage is written with per-bucket dynamic overwrite (not append): a
-        second write over the same root replaces each touched bucket's
-        lineage row instead of stacking duplicate rows with possibly
-        different checksums — write is idempotent at the lineage level too.
-        A write that produced no files (empty input) short-circuits before
-        the read-back, which could not infer a schema.
         """
-        out = with_bucket(docs_out, self.n_buckets)
-        (
-            out.repartition(self.n_buckets, "bucket")
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")  # per-write: robust
-            .partitionBy("bucket")                        # under cloned sessions
-            .parquet(self.docs_out_path)
+        write_partitioned(
+            with_bucket(docs_out, self.n_buckets)
+            .repartition(self.n_buckets, "bucket"),
+            self.docs_out_path, "bucket",
         )
-        if not any(
-            f.endswith(".parquet")
-            for _, _, files in os.walk(self.docs_out_path)
-            for f in files
-        ):
+        back = read_written(self.spark, self.docs_out_path, exclude_buckets)
+        if back is None:
             return {"doc_count": 0, "span_count": 0, "buckets": 0}
-        back = self.read_docs_out()
-        if exclude_buckets is not None:
-            back = back.join(F.broadcast(exclude_buckets), "bucket", "left_anti")
-        lin = lineage_rows(back)
-        rows = lin.collect()
-        if rows:
-            (
-                self.spark.createDataFrame(rows, lin.schema)
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("bucket")
-                .parquet(self.lineage_path)
-            )
+        rows = write_lineage(self.spark, self.lineage_path, lineage_rows(back))
         return {
             "doc_count": sum(r["doc_count"] for r in rows),
             "span_count": sum(r["span_count"] for r in rows),
@@ -206,25 +356,18 @@ def run_job(
 ) -> dict:
     """End-to-end resumable job: prune completed buckets, extract, write.
 
-    ``fail_after_buckets`` simulates a mid-job crash for the restart test: only
-    the first k pending buckets are processed this run.
+    Extraction is per-document, so the INPUT is pruned before the pipeline
+    runs; ``fail_after_buckets`` simulates a mid-job crash for the restart
+    test: only the first k pending buckets are processed this run.
     """
     from .pipeline import run_extraction
 
     io = TableIO(spark, out_root, n_buckets)
-    pending = io.filter_pending(docs)
-    if fail_after_buckets is not None:
-        keep = [
-            r["bucket"]
-            for r in pending.select("bucket").distinct().orderBy("bucket").collect()
-        ][:fail_after_buckets]
-        pending = pending.filter(F.col("bucket").isin(keep))
-    # limit-1 emptiness probe, not a full count — a complete pre-pass over the
-    # pruned scan at 100 TB just to report a number is an avoidable job; the
-    # real doc count comes from the written lineage below.
-    if pending.isEmpty():
-        return {"docs_processed": 0, "skipped": True}
     done = io.completed_buckets()
-    docs_out = run_extraction(spark, pending.drop("bucket"))
+    pending = pending_buckets([with_bucket(docs, n_buckets)], done,
+                              fail_after_buckets)
+    if pending is None:
+        return {"docs_processed": 0, "skipped": True}
+    docs_out = run_extraction(spark, pending[0].drop("bucket"))
     stats = io.write(docs_out, exclude_buckets=done)
     return {"docs_processed": stats["doc_count"], "skipped": False}

@@ -1,1 +1,1 @@
-from .extract import extract_media_udf, strip_text_udf  # noqa: F401
+"""Arrow-batched extraction operators (``extract``)."""

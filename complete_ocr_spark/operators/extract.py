@@ -8,15 +8,11 @@ bodies (synthetic descriptor -> real detector/recognizer, loaded once per
 executor as a module-level singleton); the UDF boundary and the plan stay
 identical.
 
-Two forms:
-
-* ``extract_spans_batch`` — the pipeline's mapInPandas kernel. Handles both
-  span kinds in ONE pass and emits FLAT rows (doc_id, offset, sub, kind, text,
-  media_ref). Flat string/int columns convert to Arrow vectorized; returning
-  nested array<struct> from a pandas UDF walks Python objects per span and
-  measured ~2.5x slower end-to-end.
-* ``strip_text_udf`` / ``extract_media_udf`` — scalar pandas UDFs returning
-  array<struct> spans, for span-level composition outside the main pipeline.
+``make_extract_spans_batch`` builds the pipeline's mapInPandas kernel. It handles both
+span kinds in ONE pass and emits FLAT rows (doc_id, offset, sub, kind, text,
+media_ref). Flat string/int columns convert to Arrow vectorized; returning
+nested array<struct> from a pandas UDF walks Python objects per span and
+measured ~2.5x slower end-to-end.
 """
 
 from __future__ import annotations
@@ -24,15 +20,10 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..kernels.page import extract_page_np
 from ..kernels.textstrip import strip_blocks
-from ..schemas import OUT_SPAN_STRUCT
 from ..synth import resolve_descriptor
-
-_OUT = T.ArrayType(OUT_SPAN_STRUCT)
 
 # flat output schema of extract_spans_batch; `sub` is the within-source-span
 # output position (reading order inside a page)
@@ -192,28 +183,3 @@ def page_views_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             pdf_out[c] = pdf_out[c].astype("int32")
         yield pdf_out
 
-
-@F.pandas_udf(_OUT)
-def strip_text_udf(texts: pd.Series) -> pd.Series:
-    """text span -> 0 or 1 output spans (boilerplate-stripped plain text)."""
-    out = []
-    for t in texts:
-        s = strip_blocks(t)
-        out.append([] if s is None else [{"kind": "text", "text": s, "media_ref": None}])
-    return pd.Series(out)
-
-
-@F.pandas_udf(_OUT)
-def extract_media_udf(media_refs: pd.Series, offsets: pd.Series) -> pd.Series:
-    """media_ref span -> extracted page spans (lines/tables/figures in reading
-    order). Descriptor resolution stands in for fetching the page payload; the
-    page number is the span offset (the reference parses it from the filename,
-    src/pdf_ocr_frcnn_tesseract_ocr.py:126-128)."""
-    out = []
-    for mr, off in zip(media_refs, offsets):
-        if mr is None:
-            out.append([])
-            continue
-        spans = extract_page_np(resolve_descriptor(mr), int(off), mr)
-        out.append([{"kind": k, "text": t, "media_ref": m} for k, t, m in spans])
-    return pd.Series(out)

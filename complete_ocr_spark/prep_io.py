@@ -68,13 +68,12 @@ prefix-sum, never a global window.
 
 from __future__ import annotations
 
-import hashlib
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .config import DEFAULT_N_BUCKETS
+from .curate_io import curate_kwargs_geometry
 from .functions.bpe import bpe_encode, bpe_train
 from .functions.curate import curate_corpus
 from .functions.dedup import strip_dup_segments
@@ -86,14 +85,19 @@ from .functions.prep import (
     temperature_mix,
     upsample_domains,
 )
-from .io import has_parquet, parallel_actions, require_local, with_bucket
-from .streaming.dedup_stream import _geometry_guard
-
-# see curate_io._GEOMETRY_EXCLUDED: DataFrames and scratch handles carry no
-# stable serialization; their decision-relevant PRESENCE is recorded instead
-_GEOMETRY_EXCLUDED = ("embeddings", "near_dup_sig_store", "doc_media",
-                      "media", "media_clusters", "media_sig_store",
-                      "clf_weights")  # identity pinned via the clf fingerprint
+from .io import (
+    bucket_lineage,
+    completed_buckets,
+    geometry_guard,
+    has_parquet,
+    parallel_actions,
+    pending_buckets,
+    read_written,
+    require_local,
+    with_bucket,
+    write_lineage,
+    write_partitioned,
+)
 
 AUDIT_COLS = ("lang", "quality", "n_tokens", "dup_line_frac",
               "top_bigram_frac", "sym_ratio", "eval_overlap",
@@ -148,7 +152,7 @@ def write_training_data(
     texts_path, packs_path, audit_path, merges_path, lin_path = \
         training_paths(out_root)
     upsample_bp = dict(upsample_bp or {})
-    geometry = json.loads(json.dumps({
+    geometry_guard(out_root, {
         "kind": "training-data",
         "n_buckets": n_buckets,
         "seg_win": seg_win, "seg_stride": seg_stride,
@@ -158,26 +162,9 @@ def write_training_data(
         "n_merges": n_merges, "bpe_min_pair_count": bpe_min_pair_count,
         "merges_provided": merges is not None,
         "ctx_len": ctx_len,
-        "semantic": curate_kwargs.get("embeddings") is not None,
-        "media_tier": curate_kwargs.get("doc_media") is not None,
-        # model gate (round 8): pin the weight ARTIFACT's identity, not the
-        # list (a 2^20-bucket table would bloat the sidecar unreadable)
-        "clf": None if curate_kwargs.get("clf_weights") is None else {
-            "n_buckets": len(curate_kwargs["clf_weights"]),
-            "fingerprint": hashlib.md5(",".join(
-                str(int(w)) for w in curate_kwargs["clf_weights"]
-            ).encode()).hexdigest(),
-        },
-        **{k: v for k, v in sorted(curate_kwargs.items())
-           if k not in _GEOMETRY_EXCLUDED},
-    }))
-    _geometry_guard(out_root, geometry, filename="_training_geometry.json")
-
-    # resume probe (write_curated contract): buckets with a lineage row are
-    # complete; has_parquet, not exists (crash during the lineage write)
-    done = None
-    if has_parquet(lin_path):
-        done = spark.read.parquet(lin_path).select("bucket").distinct()
+        **curate_kwargs_geometry(curate_kwargs),
+    }, filename="_training_geometry.json")
+    done = completed_buckets(spark, lin_path)
 
     # -- stages 1-2: curation decisions + stripped text ---------------------
     curated = curate_corpus(
@@ -334,22 +321,13 @@ def write_training_data(
     )
     audit = with_bucket(audit, n_buckets, id_col=id_col)
 
-    if done is not None:
-        texts = texts.join(F.broadcast(done), "bucket", "left_anti")
-        packs = packs.join(F.broadcast(done), "bucket", "left_anti")
-        audit = audit.join(F.broadcast(done), "bucket", "left_anti")
-    if fail_after_buckets is not None:
-        keep_b = [
-            r["bucket"]
-            for r in audit.select("bucket").distinct()
-            .orderBy("bucket").collect()
-        ][:fail_after_buckets]
-        texts = texts.filter(F.col("bucket").isin(keep_b))
-        packs = packs.filter(F.col("bucket").isin(keep_b))
-        audit = audit.filter(F.col("bucket").isin(keep_b))
-    if audit.isEmpty():
+    # audit covers every bucket: it drives the crash simulation and the
+    # emptiness short-circuit
+    pending = pending_buckets([audit, texts, packs], done, fail_after_buckets)
+    if pending is None:
         return {"docs_in": 0, "kept": 0, "buckets_written": 0,
                 "skipped": True, "n_merges": 0, "total_tokens": 0}
+    audit, texts, packs = pending
     # The three product-table writes are independent (distinct paths; every
     # shared upstream frame — curated/stripped/finals/mix/ups/enc/
     # contaminated — is already a MATERIALIZED checkpoint by this point:
@@ -357,57 +335,16 @@ def write_training_data(
     # they overlap (io.parallel_actions, guide §2.6). The lineage read-back
     # below stays strictly after all three.
     def _writer(frame, path):
-        def _w():
-            (
-                frame.repartition(n_buckets, "bucket")
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("bucket")
-                .parquet(path)
-            )
-        return _w
+        return lambda: write_partitioned(
+            frame.repartition(n_buckets, "bucket"), path, "bucket")
 
     parallel_actions(_writer(texts, texts_path), _writer(packs, packs_path),
                      _writer(audit, audit_path))
-    # lineage from the files just written; audit drives (every input doc has
-    # an audit row); texts may be empty (everything dropped)
-    audit_back = spark.read.parquet(audit_path)
-    if done is not None:
-        audit_back = audit_back.join(F.broadcast(done), "bucket", "left_anti")
-    lin = audit_back.groupBy("bucket").agg(
-        F.min(id_col).alias("doc_range_min"),
-        F.max(id_col).alias("doc_range_max"),
-        F.count("*").alias("doc_count"),
-        F.sum(F.when(F.col("keep"), 1).otherwise(0)).alias("kept_count"),
-    )
-    if has_parquet(texts_path):
-        back = spark.read.parquet(texts_path)
-        if done is not None:
-            back = back.join(F.broadcast(done), "bucket", "left_anti")
-        lin = lin.join(
-            back.withColumn(
-                "h", F.xxhash64(F.col(id_col), F.col("text_final"))
-            )
-            .groupBy("bucket")
-            .agg(
-                F.sum("n_bpe_tokens").alias("token_count"),
-                F.expr("bit_xor(h)").alias("checksum"),
-            ),
-            "bucket", "left",
-        )
-    else:
-        lin = lin.withColumn(
-            "token_count", F.lit(None).cast("bigint")
-        ).withColumn("checksum", F.lit(None).cast("bigint"))
-    rows = lin.collect()
-    if rows:
-        (
-            spark.createDataFrame(rows, lin.schema)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("bucket")
-            .parquet(lin_path)
-        )
+    rows = write_lineage(spark, lin_path, bucket_lineage(
+        read_written(spark, audit_path, done),
+        read_written(spark, texts_path, done),  # None: everything dropped
+        id_col, "text_final", "n_bpe_tokens",
+    ))
     n_m = (spark.read.parquet(merges_path).count()
            if has_parquet(merges_path) else 0)
     return {

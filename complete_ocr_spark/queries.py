@@ -4777,7 +4777,7 @@ ANCHOR_REGISTRY: dict[str, tuple] = {
     "q_curation_funnel": (q_curation_funnel, _funnel_sql()),
     # round-1 TPC-H scaffolding folded r7 to free driver slots for
     # q_decontaminate / q_pack_sequences (no SURVEY §2 row cites either;
-    # the anti-join shape stays driver-gated via io.filter_pending's
+    # the anti-join shape stays driver-gated via io.pending_buckets'
     # test_resume coverage, the window-topk shape via q_session_windows)
     "q_customers_without_orders": (q_customers_without_orders, SQL_ANTI),
     "q_top3_suppliers_per_nation": (q_top3_suppliers_per_nation, SQL_TOP3),

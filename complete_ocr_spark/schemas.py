@@ -28,16 +28,6 @@ DOC_SCHEMA = T.StructType(
     ]
 )
 
-# output span *without* offset — intermediate shape emitted by the branch UDFs;
-# dense offsets are assigned at reassembly (groupBy(doc_id) + array_sort).
-OUT_SPAN_STRUCT = T.StructType(
-    [
-        T.StructField("kind", T.StringType(), False),
-        T.StructField("text", T.StringType(), True),
-        T.StructField("media_ref", T.StringType(), True),
-    ]
-)
-
 # detection struct (box normalized to int pixel coords like the reference's
 # boxes.astype(np.int32), src/table_cellwise_detection.py:103)
 BOX_STRUCT = T.StructType(

@@ -90,7 +90,6 @@ arrival-order-free).
 
 from __future__ import annotations
 
-import hashlib
 import json
 import os
 
@@ -98,11 +97,20 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..config import DEFAULT_N_BUCKETS
+from ..curate_io import AUDIT_COLS  # one audit schema, batch and stream
 from ..functions.curate import annotate_gates, heuristic_reason
 from ..functions.dedup import _strip_spans, normalized
-from ..io import has_parquet, parallel_actions, require_local, with_bucket
+from ..io import (
+    bucket_lineage,
+    geometry_guard,
+    has_parquet,
+    parallel_actions,
+    require_local,
+    weights_fingerprint,
+    with_bucket,
+    write_partitioned,
+)
 from .dedup_stream import (
-    _geometry_guard,
     make_dedup_batch,
     read_cluster_labels,
     read_flags,
@@ -114,9 +122,6 @@ from .segment_stream import (
 )
 
 N_FP_BUCKETS = 16
-
-AUDIT_COLS = ("lang", "quality", "n_tokens", "dup_line_frac",
-              "top_bigram_frac", "sym_ratio", "keep", "drop_reason")
 
 
 def curate_stream_paths(out_root: str) -> dict[str, str]:
@@ -179,7 +184,7 @@ def make_curate_batch(spark: SparkSession, out_root: str,
     form)."""
     out_root = require_local(out_root, "curate-stream out_root")
     paths = curate_stream_paths(out_root)
-    geometry = json.loads(json.dumps({
+    geometry = {
         "kind": "curate-stream",
         "languages": languages, "min_quality": min_quality,
         "max_dup_line_frac": max_dup_line_frac,
@@ -209,23 +214,18 @@ def make_curate_batch(spark: SparkSession, out_root: str,
         # quality standards (the decon_stream benchmark-fingerprint rule)
         "clf": None if clf_weights is None else {
             "n_buckets": len(clf_weights),
-            "fingerprint": hashlib.md5(
-                ",".join(str(int(w)) for w in clf_weights).encode()
-            ).hexdigest(),
+            "fingerprint": weights_fingerprint(clf_weights),
             "bias_micros": int(clf_bias_micros),
             "threshold_micros": int(clf_threshold_micros),
         },
         # perplexity gate (round 8): the LM table pair's identity, same rule
         "lm": None if lm_w1_micros is None else {
             "n_buckets": len(lm_w1_micros),
-            "fingerprint": hashlib.md5(
-                (",".join(str(int(w)) for w in lm_w1_micros) + "|"
-                 + ",".join(str(int(w)) for w in (lm_w2_micros or []))
-                 ).encode()
-            ).hexdigest(),
+            "fingerprint": weights_fingerprint(lm_w1_micros,
+                                               lm_w2_micros or []),
             "max_avg_nll_micros": int(max_avg_nll_micros),
         },
-    }))
+    }
     heur = heuristic_reason(
         text_col, languages, min_quality, max_dup_line_frac,
         max_top_bigram_frac, min_bigram_tokens, max_symbol_ratio,
@@ -293,7 +293,7 @@ def make_curate_batch(spark: SparkSession, out_root: str,
         bid = int(batch_id)
         if batch_df.isEmpty():
             return
-        _geometry_guard(out_root, geometry, filename="_curate_geometry.json")
+        geometry_guard(out_root, geometry, filename="_curate_geometry.json")
         id_type = dict(batch_df.dtypes)[id_col]
         # 1. heuristic gates (+ the model margin when the tier is on): one
         # narrow map, materialized once (feeds the survivor filter AND the
@@ -360,13 +360,8 @@ def make_curate_batch(spark: SparkSession, out_root: str,
         _surv = {}
 
         def _write_fps():
-            (
-                fps.repartition(n_fp_buckets, "fb")
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id", "fb")
-                .parquet(paths["fps"])
-            )
+            write_partitioned(fps.repartition(n_fp_buckets, "fb"),
+                              paths["fps"], "batch_id", "fb")
 
         def _ck_surv():
             _surv["df"] = passed.join(
@@ -444,14 +439,9 @@ def make_curate_batch(spark: SparkSession, out_root: str,
                     batch_df.select(id_col).distinct(), id_col
                 ).select(id_col, "media_ref").localCheckpoint()
             )
-            (
-                batch_links.withColumn("batch_id", F.lit(bid))
-                .coalesce(1)
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id")
-                .parquet(paths["links"])
-            )
+            write_partitioned(
+                batch_links.withColumn("batch_id", F.lit(bid)).coalesce(1),
+                paths["links"], "batch_id")
             new_refs = batch_links.select("media_ref").distinct()
             media_sig_path = os.path.join(paths["media"], "sigs")
             if has_parquet(media_sig_path):
@@ -542,14 +532,10 @@ def make_curate_batch(spark: SparkSession, out_root: str,
         # All writes stay (batch_id, ...)-keyed dynamic overwrite, so crash/
         # re-delivery semantics are unchanged by the overlap.
         def _write_audit():
-            (
+            write_partitioned(
                 audit.withColumn("batch_id", F.lit(bid))
-                .repartition(n_buckets, "bucket")
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id", "bucket")
-                .parquet(paths["audit"])
-            )
+                .repartition(n_buckets, "bucket"),
+                paths["audit"], "batch_id", "bucket")
 
         # training: kept docs with their duplicated spans stripped (the one
         # strip pass above). May be EMPTY for an all-dropped batch — skip
@@ -573,49 +559,19 @@ def make_curate_batch(spark: SparkSession, out_root: str,
 
         def _write_training():
             if has_training:
-                (
+                write_partitioned(
                     training.withColumn("batch_id", F.lit(bid))
-                    .repartition(n_buckets, "bucket")
-                    .write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy("batch_id", "bucket")
-                    .parquet(paths["training"])
-                )
+                    .repartition(n_buckets, "bucket"),
+                    paths["training"], "batch_id", "bucket")
 
         def _write_lineage():
             # lineage per (batch, bucket), computed from the checkpointed
             # frames — fully distributed, <= n_buckets rows per batch
-            lin = audit.groupBy("bucket").agg(
-                F.min(id_col).alias("doc_range_min"),
-                F.max(id_col).alias("doc_range_max"),
-                F.count("*").alias("doc_count"),
-                F.sum(F.when(F.col("keep"), 1).otherwise(0))
-                .alias("kept_count"),
-            )
-            if has_training:
-                lin = lin.join(
-                    training.withColumn(
-                        "h", F.xxhash64(F.col(id_col), F.col("text_clean"))
-                    )
-                    .groupBy("bucket")
-                    .agg(
-                        F.sum("n_kept").alias("token_count"),
-                        F.expr("bit_xor(h)").alias("checksum"),
-                    ),
-                    "bucket", "left",
-                )
-            else:
-                lin = lin.withColumn(
-                    "token_count", F.lit(None).cast("bigint")
-                ).withColumn("checksum", F.lit(None).cast("bigint"))
-            (
-                lin.withColumn("batch_id", F.lit(bid))
-                .coalesce(1)
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id", "bucket")
-                .parquet(paths["lineage"])
-            )
+            lin = bucket_lineage(audit, training if has_training else None,
+                                 id_col, "text_clean", "n_kept")
+            write_partitioned(
+                lin.withColumn("batch_id", F.lit(bid)).coalesce(1),
+                paths["lineage"], "batch_id", "bucket")
 
         parallel_actions(_write_training, _write_lineage)
 

@@ -25,15 +25,13 @@ loudly instead (the package-wide geometry-guard contract)."""
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..functions.prep import benchmark_grams, decontaminate
-from ..io import require_local
-from .dedup_stream import _geometry_guard, _has_parquet
+from ..io import geometry_guard, has_parquet, require_local, write_partitioned
 
 
 def decon_paths(out_root: str) -> str:
@@ -62,28 +60,22 @@ def make_decon_batch(spark: SparkSession, out_root: str,
     out_root = require_local(out_root, "decon out_root")
     flag_path = decon_paths(out_root)
     bg = benchmark_grams(bench, id_col, text_col, n).localCheckpoint()
-    geometry = json.loads(json.dumps({
+    geometry = {
         "kind": "decon-stream",
         "n": n, "min_hits": min_hits,
         "bench": _bench_fingerprint(bg),
-    }))
+    }
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         bid = int(batch_id)
         if batch_df.isEmpty():
             return
-        _geometry_guard(out_root, geometry, filename="_decon_geometry.json")
+        geometry_guard(out_root, geometry, filename="_decon_geometry.json")
         flags = decontaminate(
             batch_df, bench, id_col, text_col, n=n, min_hits=min_hits,
         )
-        (
-            flags.withColumn("batch_id", F.lit(bid))
-            .coalesce(1)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(flag_path)
-        )
+        write_partitioned(flags.withColumn("batch_id", F.lit(bid)).coalesce(1),
+                          flag_path, "batch_id")
 
     return process_batch
 
@@ -94,7 +86,7 @@ def read_decon_incr(spark: SparkSession, out_root: str,
     contamination, batch_id). Equals batch decontaminate over the union of
     all arrived batches under ANY arrival order (pure per-doc map)."""
     flag_path = decon_paths(out_root)
-    if not _has_parquet(flag_path):
+    if not has_parquet(flag_path):
         return spark.createDataFrame(
             [], f"doc_id {id_type}, n_grams bigint, n_hits bigint, "
                 f"contamination double, batch_id bigint")

@@ -47,9 +47,13 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..functions.dedup import connected_components, simhash64, simhash_band_keys
-# has_parquet: the shared crash-safe probe (io.py); module-private alias kept
-# for existing callers and segment_stream's import
-from ..io import has_parquet as _has_parquet, parallel_actions, require_local
+from ..io import (
+    geometry_guard,
+    has_parquet,
+    parallel_actions,
+    require_local,
+    write_partitioned,
+)
 
 
 N_VALUE_BUCKETS = 16  # band-index partition fan-out; see make_dedup_batch
@@ -101,7 +105,7 @@ def read_flags(spark: SparkSession, out_root: str,
     file yet."""
     out_root = require_local(out_root, "streaming-dedup out_root")
     flag_path = dedup_paths(out_root)[1]
-    if _has_parquet(flag_path):
+    if has_parquet(flag_path):
         return spark.read.parquet(flag_path)
     if scheme is None:
         scheme = _stored_scheme(out_root) or "simhash"
@@ -127,56 +131,6 @@ def cluster_paths(out_root: str) -> tuple[str, str]:
         os.path.join(out_root, "assignments"),
         os.path.join(out_root, "label_moves"),
     )
-
-
-def _geometry_guard(out_root: str, geometry: dict,
-                    filename: str = "_dedup_geometry.json") -> None:
-    """Persist the banding geometry next to the index on first use; refuse to
-    run under a DIFFERENT geometry — joining new band keys against an index
-    built with other (n_blocks, max_hamming, n_value_buckets) silently
-    compares incompatible key spaces and un-flags real duplicates.
-
-    One ADDITIVE upgrade is allowed: a store written before cluster
-    maintenance existed lacks the 'n_doc_buckets' key; enabling clusters on
-    it only adds that key (the banding key space is unchanged), so the stored
-    geometry is upgraded in place — the missing cluster log itself is then
-    rebuilt by ``_rebuild_cluster_log``.
-
-    ``filename`` lets non-banding stores (curate_io's curated output, the
-    incremental curation runner) reuse the same persist-and-refuse contract
-    under their own sidecar name; ``geometry`` must be JSON-round-trip
-    stable (lists, not tuples) — the comparison is against the parsed
-    file."""
-    import json
-
-    path = os.path.join(out_root, filename)
-    if os.path.exists(path):
-        try:
-            with open(path) as f:
-                stored = json.load(f)
-        except ValueError:
-            stored = None  # crash mid-write left a truncated file: rewrite it
-        if stored is not None:
-            additive_upgrade = (
-                stored != geometry
-                and set(geometry) - set(stored) == {"n_doc_buckets"}
-                and {k: geometry[k] for k in stored} == stored
-            )
-            if stored != geometry and not additive_upgrade:
-                raise ValueError(
-                    f"streaming-dedup geometry mismatch at {out_root}: index "
-                    f"was built with {stored}, this run uses {geometry}; "
-                    "rebuild the index or restore the original parameters"
-                )
-            if not additive_upgrade:
-                return  # exact match: nothing to rewrite
-    os.makedirs(out_root, exist_ok=True)
-    tmp = path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(geometry, f)
-    os.replace(tmp, path)  # atomic: no truncated file survives a crash
-
-
 
 
 def _bands(sigs: DataFrame, n_blocks: int, max_hamming: int) -> DataFrame:
@@ -298,7 +252,7 @@ def _read_moves(spark: SparkSession, mov_path: str, id_type: str,
                 before_batch: int | None = None) -> DataFrame:
     """label_moves as (src, dst), optionally only batches < before_batch; an
     empty typed frame when no move has been recorded."""
-    if _has_parquet(mov_path):
+    if has_parquet(mov_path):
         mv = spark.read.parquet(mov_path)
         if before_batch is not None:
             mv = mv.filter(F.col("batch_id") < before_batch)
@@ -414,7 +368,7 @@ def _update_clusters(spark: SparkSession, out_root: str, batch_docs: DataFrame,
     earlier = matches.filter(F.col("dup_batch") < bid).select("doc", "dup_of")
     edges = within
     prior_roots = None
-    if _has_parquet(asg_path):
+    if has_parquet(asg_path):
         # One partition-pruned assignment lookup serves both prior-label
         # uses: labels of MATCHED earlier docs (mini-graph root nodes) and
         # labels of RE-CRAWLED batch docs (same id, later batch).
@@ -469,13 +423,8 @@ def _update_clusters(spark: SparkSession, out_root: str, batch_docs: DataFrame,
         .withColumn("db", F.pmod(F.xxhash64("doc"), F.lit(n_doc_buckets)).cast("int"))
     )
     def _write_asg():
-        (
-            asg_new.repartition(n_doc_buckets, "db")
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id", "db")
-            .parquet(asg_path)
-        )
+        write_partitioned(asg_new.repartition(n_doc_buckets, "db"), asg_path,
+                          "batch_id", "db")
 
     def _write_moves():
         if prior_roots is None:
@@ -492,13 +441,7 @@ def _update_clusters(spark: SparkSession, out_root: str, batch_docs: DataFrame,
             .localCheckpoint()
         )
         if not mv.isEmpty():
-            (
-                mv.coalesce(1)
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id")
-                .parquet(mov_path)
-            )
+            write_partitioned(mv.coalesce(1), mov_path, "batch_id")
 
     # independent writes (different stores; both plans read only the
     # checkpointed cc/prior_roots/batch_docs frames) — overlap them; the
@@ -529,7 +472,7 @@ def read_cluster_labels(spark: SparkSession, out_root: str,
     (functions.dedup.dup_clusters) — pinned by tests and by the
     q_dup_clusters_incr recursive-CTE oracle."""
     asg_path, mov_path = cluster_paths(out_root)
-    if not _has_parquet(asg_path):
+    if not has_parquet(asg_path):
         return spark.createDataFrame(
             [], f"doc {id_type}, cluster {id_type}, n_members bigint"
         )
@@ -563,7 +506,7 @@ def compact_cluster_log(spark: SparkSession, out_root: str) -> None:
 
     out_root = require_local(out_root, "streaming-dedup out_root")
     asg_path, mov_path = cluster_paths(out_root)
-    if not _has_parquet(asg_path) or not _has_parquet(mov_path):
+    if not has_parquet(asg_path) or not has_parquet(mov_path):
         return  # nothing to compact (no log, or no merge events yet)
     asg = spark.read.parquet(asg_path)
     id_type = dict(asg.dtypes)["doc"]
@@ -578,13 +521,7 @@ def compact_cluster_log(spark: SparkSession, out_root: str) -> None:
         # dynamic overwrite replaces every partition with its resolved rows
         .localCheckpoint()  # materialize BEFORE overwriting what it reads
     )
-    (
-        compacted.repartition("db")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id", "db")
-        .parquet(asg_path)
-    )
+    write_partitioned(compacted.repartition("db"), asg_path, "batch_id", "db")
     shutil.rmtree(mov_path)
 
 
@@ -653,13 +590,8 @@ def make_dedup_batch(spark: SparkSession, out_root: str,
         rebuilt = _bands(prior_sigs, n_blocks, max_hamming).withColumn(
             "vb", F.pmod(F.col("value"), F.lit(n_value_buckets)).cast("int")
         )
-        (
-            rebuilt.repartition(n_value_buckets, "vb")
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id", "vb")
-            .parquet(band_path)
-        )
+        write_partitioned(rebuilt.repartition(n_value_buckets, "vb"),
+                          band_path, "batch_id", "vb")
 
     def _rebuild_cluster_log(backlog: list[int]) -> None:
         """The cluster log is behind the signature table (pre-cluster layout,
@@ -693,8 +625,8 @@ def make_dedup_batch(spark: SparkSession, out_root: str,
             # nothing to sign, flag, or index — make the no-op explicit
             # instead of relying on isin([])-is-false and empty-frame writes
             return
-        _geometry_guard(out_root, geometry)
-        if _has_parquet(sig_path) and not _has_parquet(band_path):
+        geometry_guard(out_root, geometry)
+        if has_parquet(sig_path) and not has_parquet(band_path):
             _rebuild_band_index(bid)
         if maintain_clusters:
             backlog = _cluster_backlog(
@@ -716,7 +648,7 @@ def make_dedup_batch(spark: SparkSession, out_root: str,
         )
         # bounded driver read: at most n_value_buckets values
         touched = [r["vb"] for r in new_bands.select("vb").distinct().collect()]
-        if os.path.exists(band_path):
+        if has_parquet(band_path):
             prior_bands = (
                 spark.read.parquet(band_path)
                 .filter((F.col("batch_id") < bid) & F.col("vb").isin(touched))
@@ -739,28 +671,13 @@ def make_dedup_batch(spark: SparkSession, out_root: str,
         # three deterministically. flags may be empty for a batch; the
         # partition column is still recorded via an explicit lit.
         parallel_actions(
-            lambda: (
-                sigs.coalesce(1)
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id")
-                .parquet(sig_path)
-            ),
-            lambda: (
-                new_bands.repartition(n_value_buckets, "vb")
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id", "vb")
-                .parquet(band_path)
-            ),
-            lambda: (
+            lambda: write_partitioned(sigs.coalesce(1), sig_path, "batch_id"),
+            lambda: write_partitioned(
+                new_bands.repartition(n_value_buckets, "vb"), band_path,
+                "batch_id", "vb"),
+            lambda: write_partitioned(
                 flags.withColumn("batch_id", F.lit(bid))  # restore post-agg
-                .coalesce(1)
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id")
-                .parquet(flag_path)
-            ),
+                .coalesce(1), flag_path, "batch_id"),
         )
         if maintain_clusters:
             _update_clusters(
@@ -867,7 +784,7 @@ def make_minhash_dedup_batch(spark: SparkSession, out_root: str,
         bid = int(batch_id)
         if batch_df.isEmpty():
             return
-        _geometry_guard(out_root, geometry)
+        geometry_guard(out_root, geometry)
         if maintain_clusters:
             backlog = _cluster_backlog(
                 band_path, cluster_paths(out_root)[0], bid
@@ -888,7 +805,7 @@ def make_minhash_dedup_batch(spark: SparkSession, out_root: str,
             .localCheckpoint()  # feeds probe, join sides, write, clusters
         )
         touched = [r["vb"] for r in new_bands.select("vb").distinct().collect()]
-        if _has_parquet(band_path):
+        if has_parquet(band_path):
             prior = (
                 spark.read.parquet(band_path)
                 .filter((F.col("batch_id") < bid) & F.col("vb").isin(touched))
@@ -913,21 +830,10 @@ def make_minhash_dedup_batch(spark: SparkSession, out_root: str,
                 (-F.col("m.neg")).cast("bigint").alias("n_bands_hit"),
             )
         )
-        (
-            new_bands.repartition(n_value_buckets, "vb")
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id", "vb")
-            .parquet(band_path)
-        )
-        (
-            flags.withColumn("batch_id", F.lit(bid))
-            .coalesce(1)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(flag_path)
-        )
+        write_partitioned(new_bands.repartition(n_value_buckets, "vb"),
+                          band_path, "batch_id", "vb")
+        write_partitioned(flags.withColumn("batch_id", F.lit(bid)).coalesce(1),
+                          flag_path, "batch_id")
         if maintain_clusters:
             _update_clusters(
                 spark, out_root,

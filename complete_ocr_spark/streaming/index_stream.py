@@ -59,8 +59,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..functions import retrieval
-from ..io import require_local
-from .dedup_stream import _geometry_guard, _has_parquet
+from ..io import geometry_guard, has_parquet, require_local, write_partitioned
 
 N_TB_BUCKETS = 16
 
@@ -112,31 +111,23 @@ def make_index_batch(spark: SparkSession, out_root: str,
             # partitions would double-count the batch (module docstring)
         if batch_df.isEmpty():
             return
-        _geometry_guard(out_root, geometry, filename="_index_geometry.json")
+        geometry_guard(out_root, geometry, filename="_index_geometry.json")
         pairs = retrieval.doc_term_pairs(
             batch_df, id_col, text_col, n_buckets
         ).localCheckpoint()  # feeds the stats agg AND the store write
-        (
+        write_partitioned(
             pairs.withColumn("batch_id", F.lit(bid))
-            .repartition(n_buckets, "tb")
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id", "tb")
-            .parquet(post_path)
-        )
-        (
+            .repartition(n_buckets, "tb"),
+            post_path, "batch_id", "tb")
+        write_partitioned(
             pairs.groupBy("doc_id").agg(F.first("dl").alias("dl"))
             .agg(
                 F.count("*").cast("bigint").alias("n_docs"),
                 F.sum("dl").cast("bigint").alias("total_tokens"),
             )
             .withColumn("batch_id", F.lit(bid))
-            .coalesce(1)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(stats_path)
-        )
+            .coalesce(1),
+            stats_path, "batch_id")
         if rebase_every is not None and (bid + 1) % rebase_every == 0:
             rebase_in_place(spark, out_root, through=bid)
 
@@ -166,12 +157,12 @@ def rebase_in_place(spark: SparkSession, out_root: str, through: int) -> None:
         sparts.append(
             spark.read.parquet(os.path.join(base_old, "stats"))
             .select("n_docs", "total_tokens"))
-    if _has_parquet(post_path):
+    if has_parquet(post_path):
         parts.append(
             spark.read.parquet(post_path)
             .filter(F.col("batch_id") <= through)
             .select("doc_id", "dl", "term", "tf", "tb"))
-    if _has_parquet(stats_path):
+    if has_parquet(stats_path):
         sparts.append(
             spark.read.parquet(stats_path)
             .filter(F.col("batch_id") <= through)
@@ -228,7 +219,7 @@ def read_index_stats(spark: SparkSession, out_root: str) -> tuple[int, int]:
     if base is not None:
         row = spark.read.parquet(os.path.join(base, "stats")).head()
         n, tt = int(row["n_docs"]), int(row["total_tokens"])
-    if _has_parquet(stats_path):
+    if has_parquet(stats_path):
         row = (
             spark.read.parquet(stats_path)
             .filter(F.col("batch_id") > through)
@@ -265,7 +256,7 @@ def bm25_topk_incr(spark: SparkSession, out_root: str, terms: list[str],
         parts.append(
             spark.read.parquet(os.path.join(base, "postings")).filter(pred)
             .select("doc_id", "dl", "term", "tf"))
-    if _has_parquet(post_path):
+    if has_parquet(post_path):
         parts.append(
             spark.read.parquet(post_path)
             .filter(pred & (F.col("batch_id") > through))
@@ -298,7 +289,7 @@ def rebase(spark: SparkSession, out_root: str, dest_root: str) -> None:
                      .select("doc_id", "dl", "term", "tf", "tb"))
         sparts.append(spark.read.parquet(os.path.join(base, "stats"))
                       .select("n_docs", "total_tokens"))
-    if _has_parquet(post_path):
+    if has_parquet(post_path):
         parts.append(spark.read.parquet(post_path)
                      .filter(F.col("batch_id") > through)
                      .select("doc_id", "dl", "term", "tf", "tb"))

@@ -21,15 +21,13 @@ so it refuses loudly instead (the package-wide geometry-guard contract).
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..functions.report import corpus_report
-from ..io import require_local
-from .dedup_stream import _geometry_guard, _has_parquet
+from ..io import geometry_guard, has_parquet, require_local, write_partitioned
 
 
 def report_paths(out_root: str) -> str:
@@ -42,25 +40,19 @@ def make_report_batch(spark: SparkSession, out_root: str,
     """foreachBatch body, exposed for direct re-delivery testing."""
     out_root = require_local(out_root, "report out_root")
     path = report_paths(out_root)
-    geometry = json.loads(json.dumps({
+    geometry = {
         "kind": "report-stream",
         "lang_col": lang_col,
-    }))
+    }
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         bid = int(batch_id)
         if batch_df.isEmpty():
             return
-        _geometry_guard(out_root, geometry, filename="_report_geometry.json")
+        geometry_guard(out_root, geometry, filename="_report_geometry.json")
         rep = corpus_report(batch_df, id_col, text_col, lang_col=lang_col)
-        (
-            rep.withColumn("batch_id", F.lit(bid))
-            .coalesce(1)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(path)
-        )
+        write_partitioned(rep.withColumn("batch_id", F.lit(bid)).coalesce(1),
+                          path, "batch_id")
 
     return process_batch
 
@@ -71,7 +63,7 @@ def read_report_incr(spark: SparkSession, out_root: str) -> DataFrame:
     columns are additive), equal to batch corpus_report over the union of
     all arrived batches under ANY arrival order."""
     path = report_paths(out_root)
-    if not _has_parquet(path):
+    if not has_parquet(path):
         return spark.createDataFrame(
             [], "metric string, n_docs bigint, total bigint")
     return (

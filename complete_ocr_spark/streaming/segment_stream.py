@@ -54,8 +54,13 @@ from ..functions.dedup import (
     cdc_chunk_fingerprints,
     segment_fingerprints,
 )
-from ..io import parallel_actions, require_local
-from .dedup_stream import _geometry_guard, _has_parquet
+from ..io import (
+    geometry_guard,
+    has_parquet,
+    parallel_actions,
+    require_local,
+    write_partitioned,
+)
 
 N_FP_BUCKETS = 16
 
@@ -130,7 +135,7 @@ def make_segment_dedup_batch(spark: SparkSession, out_root: str,
         bid = int(batch_id)
         if batch_df.isEmpty():
             return
-        _geometry_guard(out_root, geometry)
+        geometry_guard(out_root, geometry)
         # the fingerprint pass feeds three consumers (touched-bucket probe,
         # owner join, store write) — materialize the batch-sized result
         # once. Both schemes normalize to (doc_id, ws, we, fp): ws/we =
@@ -157,7 +162,7 @@ def make_segment_dedup_batch(spark: SparkSession, out_root: str,
         )
         # bounded driver read: at most n_fp_buckets values
         touched = [r["fb"] for r in fps.select("fb").distinct().collect()]
-        if _has_parquet(fp_path):
+        if has_parquet(fp_path):
             prior = (
                 spark.read.parquet(fp_path)
                 .filter((F.col("batch_id") < bid) & F.col("fb").isin(touched))
@@ -216,25 +221,16 @@ def make_segment_dedup_batch(spark: SparkSession, out_root: str,
             spans = spans.localCheckpoint()
 
         def _write_fps():
-            (
+            write_partitioned(
                 fps.select("doc_id", "ws", "we", "fp", "batch_id", "fb")
                 .withColumnRenamed("doc_id", "doc")
-                .repartition(n_fp_buckets, "fb")
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id", "fb")
-                .parquet(fp_path)
-            )
+                .repartition(n_fp_buckets, "fb"),
+                fp_path, "batch_id", "fb")
 
         def _write_spans():
-            (
-                spans.withColumn("batch_id", F.lit(bid))
-                .coalesce(1)
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id")
-                .parquet(span_path)
-            )
+            write_partitioned(
+                spans.withColumn("batch_id", F.lit(bid)).coalesce(1),
+                span_path, "batch_id")
 
         # independent stores (guide §2.6): the fps write touches only its
         # own batch_id=bid partitions; the spans plan reads the fp store
@@ -248,14 +244,9 @@ def make_segment_dedup_batch(spark: SparkSession, out_root: str,
                 batch_df, id_col, text_col,
                 spans.select("doc_id", "span_start", "span_end"),
             )
-            (
-                cleaned.withColumn("batch_id", F.lit(bid))
-                .coalesce(1)
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id")
-                .parquet(clean_path(out_root))
-            )
+            write_partitioned(
+                cleaned.withColumn("batch_id", F.lit(bid)).coalesce(1),
+                clean_path(out_root), "batch_id")
 
     return process_batch
 
@@ -266,7 +257,7 @@ def read_segment_spans(spark: SparkSession, out_root: str,
     span_end, n_windows, batch_id). Empty (typed) frame before the first
     non-trivial batch."""
     span_path = segment_paths(require_local(out_root, "out_root"))[1]
-    if not _has_parquet(span_path):
+    if not has_parquet(span_path):
         return spark.createDataFrame(
             [],
             f"doc_id {id_type}, dup_of {id_type}, span_start int, "
@@ -281,7 +272,7 @@ def read_clean_docs(spark: SparkSession, out_root: str,
     n_kept, n_dropped, batch_id) for EVERY doc of every processed batch.
     Empty typed frame before the first batch."""
     path = clean_path(require_local(out_root, "out_root"))
-    if not _has_parquet(path):
+    if not has_parquet(path):
         return spark.createDataFrame(
             [],
             f"doc_id {id_type}, text_clean string, n_kept bigint, "

@@ -41,14 +41,12 @@ writes. Everything tracks |batch| + |candidates|.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions.similarity import SRP_SEED, cosine, srp_hyperplanes
-from ..io import require_local
-from .dedup_stream import _geometry_guard, _has_parquet
+from ..io import geometry_guard, has_parquet, require_local, write_partitioned
 
 N_VALUE_BUCKETS = 16
 N_DOC_BUCKETS = 16
@@ -96,19 +94,19 @@ def make_semantic_dedup_batch(spark: SparkSession, out_root: str,
     resume under different parameters refuses loudly."""
     out_root = require_local(out_root, "semantic-stream out_root")
     band_path, vec_path, pair_path, flag_path = semantic_paths(out_root)
-    geometry = json.loads(json.dumps({
+    geometry = {
         "kind": "semantic-stream",
         "dim": dim, "threshold": threshold,
         "n_bits": n_bits, "n_tables": n_tables, "seed": seed,
         "n_value_buckets": n_value_buckets,
         "n_doc_buckets": n_doc_buckets,
-    }))
+    }
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         bid = int(batch_id)
         if batch_df.isEmpty():
             return
-        _geometry_guard(out_root, geometry,
+        geometry_guard(out_root, geometry,
                         filename="_semantic_geometry.json")
         batch = (
             batch_df.select(F.col(id_col).alias("doc"),
@@ -124,7 +122,7 @@ def make_semantic_dedup_batch(spark: SparkSession, out_root: str,
         )
         touched = [r["vb"] for r in keys.select("vb").distinct().collect()]
         corpus_keys = keys
-        if _has_parquet(band_path):
+        if has_parquet(band_path):
             corpus_keys = corpus_keys.unionByName(
                 spark.read.parquet(band_path)
                 .filter((F.col("batch_id") < bid) & F.col("vb").isin(touched))
@@ -158,7 +156,7 @@ def make_semantic_dedup_batch(spark: SparkSession, out_root: str,
         touched_db = [r["db"] for r in cand_db.collect()]
         earlier_vecs = batch.select(F.col("doc").alias("dup_of"),
                                     F.col("v").alias("v2"))
-        if _has_parquet(vec_path) and touched_db:
+        if has_parquet(vec_path) and touched_db:
             earlier_vecs = earlier_vecs.unionByName(
                 spark.read.parquet(vec_path)
                 .filter((F.col("batch_id") < bid)
@@ -176,32 +174,18 @@ def make_semantic_dedup_batch(spark: SparkSession, out_root: str,
             .localCheckpoint()  # feeds flags AND the pair write
         )
         flags = matches.select("doc").distinct()
-        (
-            keys.repartition(n_value_buckets, "vb")
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id", "vb")
-            .parquet(band_path)
-        )
-        (
+        write_partitioned(keys.repartition(n_value_buckets, "vb"), band_path,
+                          "batch_id", "vb")
+        write_partitioned(
             batch.withColumn("batch_id", F.lit(bid))
             .withColumn("db", F.pmod(F.xxhash64("doc"),
                                      F.lit(n_doc_buckets)).cast("int"))
-            .repartition(n_doc_buckets, "db")
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id", "db")
-            .parquet(vec_path)
-        )
+            .repartition(n_doc_buckets, "db"),
+            vec_path, "batch_id", "db")
         for frame, path in ((matches, pair_path), (flags, flag_path)):
-            (
-                frame.withColumn("batch_id", F.lit(bid))
-                .coalesce(1)
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id")
-                .parquet(path)
-            )
+            write_partitioned(
+                frame.withColumn("batch_id", F.lit(bid)).coalesce(1), path,
+                "batch_id")
 
     return process_batch
 
@@ -211,7 +195,7 @@ def read_semantic_pairs(spark: SparkSession, out_root: str,
     """All verified pairs so far: (doc, dup_of, dup_batch, cos, batch_id).
     Empty-frame fallback keeps bootstrap reads total."""
     pair_path = semantic_paths(out_root)[2]
-    if not _has_parquet(pair_path):
+    if not has_parquet(pair_path):
         return spark.createDataFrame(
             [], f"doc {id_type}, dup_of {id_type}, dup_batch bigint, "
                 f"cos double, batch_id bigint")
@@ -222,6 +206,6 @@ def read_semantic_flags(spark: SparkSession, out_root: str,
                         id_type: str = "bigint") -> DataFrame:
     """Docs with a strictly-earlier verified match: (doc, batch_id)."""
     flag_path = semantic_paths(out_root)[3]
-    if not _has_parquet(flag_path):
+    if not has_parquet(flag_path):
         return spark.createDataFrame([], f"doc {id_type}, batch_id bigint")
     return spark.read.parquet(flag_path)

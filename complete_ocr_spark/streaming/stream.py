@@ -32,7 +32,7 @@ import os
 from pyspark.sql import SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from ..io import lineage_rows, with_bucket
+from ..io import lineage_rows, with_bucket, write_partitioned
 from ..pipeline import run_extraction
 from ..schemas import DOC_SCHEMA
 
@@ -53,18 +53,10 @@ def make_process_batch(spark: SparkSession, out_root: str, n_buckets: int):
     def process_batch(batch_df, batch_id: int) -> None:
         docs_out = run_extraction(spark, batch_df)
         out = with_bucket(docs_out, n_buckets)
-        # per-write option, NOT spark.conf.set: foreachBatch executes under a
-        # cloned micro-batch session whose conf snapshot ignores later driver
-        # conf mutations — a session-level setting silently degrades to
-        # static overwrite (wiping prior batches)
-        (
+        write_partitioned(
             out.withColumn("batch_id", F.lit(int(batch_id)))
-            .repartition(n_buckets, "bucket")
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("bucket", "batch_id")
-            .parquet(docs_path)
-        )
+            .repartition(n_buckets, "bucket"),
+            docs_path, "bucket", "batch_id")
         # lineage from the files just written (no second DAG execution);
         # batch_id partition pruning keeps the re-scan to this batch only
         back = (
@@ -72,15 +64,10 @@ def make_process_batch(spark: SparkSession, out_root: str, n_buckets: int):
             .filter(F.col("batch_id") == int(batch_id))
             .drop("batch_id")
         )
-        (
-            lineage_rows(back)
-            .withColumn("batch_id", F.lit(int(batch_id)))
-            .coalesce(1)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(lineage_path)
-        )
+        write_partitioned(
+            lineage_rows(back).withColumn("batch_id", F.lit(int(batch_id)))
+            .coalesce(1),
+            lineage_path, "batch_id")
 
     return process_batch
 
@@ -103,7 +90,7 @@ def finalize_stream(spark: SparkSession, out_root: str, n_buckets: int = 32,
     streamed bucket set intersects ``completed_buckets()`` unless the caller
     passes ``allow_overwrite=True`` (legitimate when re-finalizing the same
     drained stream: the rewrite is then byte-identical)."""
-    from ..io import TableIO, with_bucket
+    from ..io import TableIO
 
     docs_path, _ = stream_paths(out_root)
     # recompute buckets for the TARGET n_buckets — the stream may have been

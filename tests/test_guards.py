@@ -1,11 +1,16 @@
-"""Loud-failure guards: non-local output roots and degenerate parameters."""
+"""Loud-failure guards: non-local output roots, degenerate parameters and
+store-geometry drift; the bounded driver-thread pool of
+io.parallel_actions."""
 
 from __future__ import annotations
+
+import threading
+import time
 
 import pytest
 
 from complete_ocr_spark.functions.similarity import ivf_train_kmeans
-from complete_ocr_spark.io import require_local
+from complete_ocr_spark.io import geometry_guard, parallel_actions, require_local
 
 
 def test_require_local_rejects_remote_uris():
@@ -24,6 +29,52 @@ def test_dedup_paths_reject_remote_root():
 
     with pytest.raises(ValueError, match="not a local path"):
         dedup_paths("s3a://bucket/dedup")
+
+
+def test_geometry_guard_names_a_kindless_store_by_its_sidecar(tmp_path):
+    root = str(tmp_path / "store")
+    geometry_guard(root, {"n_blocks": 4, "max_hamming": 3})
+    geometry_guard(root, {"n_blocks": 4, "max_hamming": 3})  # same: passes
+    with pytest.raises(ValueError, match=r"_dedup_geometry\.json geometry "
+                                         r"mismatch.*max_hamming: 3 -> 5"):
+        geometry_guard(root, {"n_blocks": 4, "max_hamming": 5})
+
+
+def test_parallel_actions_runs_at_most_three_at_once():
+    lock = threading.Lock()
+    live, peak, ran = [0], [0], []
+
+    def thunk(i):
+        def run():
+            with lock:
+                live[0] += 1
+                peak[0] = max(peak[0], live[0])
+            time.sleep(0.05)
+            with lock:
+                live[0] -= 1
+                ran.append(i)
+        return run
+
+    parallel_actions(*(thunk(i) for i in range(6)))
+    assert sorted(ran) == list(range(6))
+    assert peak[0] <= 3
+
+
+def test_parallel_actions_reraises_after_the_others_finish():
+    finished = []
+
+    def slow(i):
+        def run():
+            time.sleep(0.05)
+            finished.append(i)
+        return run
+
+    def boom():
+        raise RuntimeError("write failed")
+
+    with pytest.raises(RuntimeError, match="write failed"):
+        parallel_actions(boom, slow(0), slow(1), slow(2), slow(3))
+    assert sorted(finished) == [0, 1, 2, 3]
 
 
 def test_kmeans_rejects_zero_iterations(spark):

@@ -1,7 +1,8 @@
 """Plan-shape regression tests: the physical plans the engine relies on at
 100 TB must not silently degrade (pushdown reaching the scan, broadcast for
-small dims, no Python eval in relational queries, both pipeline shuffles
-present and no more)."""
+small dims, both pipeline shuffles present and no more). The no-Python-eval
+rule for relational queries is checked by the DuckDB gate
+(tests/test_queries_duckdb.py) on the very frame it hashes."""
 
 from __future__ import annotations
 
@@ -30,43 +31,6 @@ def test_q03_small_dim_broadcast(spark):
 def test_q05_region_nation_broadcast(spark):
     plan = _plan(ALL_Q["q05_region_revenue"][0](spark, SF_DIR))
     assert plan.count("BroadcastHashJoin") >= 2  # nation and region sides
-
-
-def test_relational_queries_have_no_python_eval(spark):
-    """Everything outside the extraction kernel must stay JVM-side
-    (whole-stage codegen), per the no-Python-hot-path design rule."""
-    for name, (fn, _sql) in ALL_Q.items():
-        if name in (
-            "q_extract_pipeline",
-            "q_extract_pipeline_opt",
-            "q_media_frame_sample",
-            "q_media_features",
-            "q_nested_hocr",
-            "q_layout_classes",
-            "q_layout_classes_prima",
-            "q_page_text_unmasked",
-            "q_singular_word_merge",
-            # simhash64 defaults to the Arrow kernel — measured 3.4x faster
-            # than the Catalyst vote agg (BASELINE.md §simhash64 A/B)
-            # SRP buckets default to the matmul kernel — measured 2.6x
-            # (BASELINE.md §SRP bucket kernel)
-            "q_embed_near_dup_srp",
-            "q_simhash",
-            "q_simhash64",
-            "q_simhash_near_dup",
-            "q_simhash_near_dup_mb",
-            "q_stream_dedup_flags",
-            "q_dup_clusters",
-            "q_dup_clusters_incr",
-            "q_corpus_curation",
-            # BPE encode is the documented Arrow kernel (merge table in the
-            # closure, per-batch word memo); training stays JVM-side and is
-            # NOT excluded
-            "q_bpe_encode",
-        ):
-            continue  # these intentionally contain the pandas kernels
-        plan = _plan(fn(spark, SF_DIR))
-        assert "ArrowEvalPython" not in plan and "MapInPandas" not in plan, name
 
 
 def test_srp_near_dup_is_single_pass_per_join_side(spark):

@@ -158,7 +158,9 @@ def test_independent_composition_matches_engine(spark, product):
     assert got == exp
 
 
-def test_crash_resume_completes_missing_buckets(spark, tmp_path):
+def test_crash_resume_completes_missing_buckets(spark, product, tmp_path):
+    """A crashed run resumes to exactly the single-shot product (the
+    module fixture, written in one run with the same parameters)."""
     root = tmp_path / "resume"
     partial = _write(spark, root, fail_after_buckets=7)
     assert partial["buckets_written"] == 7
@@ -174,8 +176,7 @@ def test_crash_resume_completes_missing_buckets(spark, tmp_path):
     again = _write(spark, root)
     assert again["skipped"] is True
 
-    clean = tmp_path / "clean"
-    _write(spark, clean)
+    clean, _ = product
     for reader in (prep_io.read_training_audit, prep_io.read_training_texts,
                    prep_io.read_training_packs):
         a = sorted(map(tuple, reader(spark, str(root)).collect()))
@@ -183,10 +184,15 @@ def test_crash_resume_completes_missing_buckets(spark, tmp_path):
         assert a == b, reader.__name__
 
 
-def test_geometry_guard_refuses_parameter_drift(spark, tmp_path):
+def test_geometry_guard_refuses_parameter_drift(spark, product, tmp_path):
+    # a copy of the product's stores: the guard reads only the sidecar, and
+    # a guard that failed to refuse must not touch the shared product
+    import shutil
+
     root = tmp_path / "g"
-    _write(spark, root, fail_after_buckets=2)
-    with pytest.raises(Exception, match="geometry"):
+    shutil.copytree(product[0], root)
+    with pytest.raises(
+            ValueError, match=r"training-data geometry mismatch.*ctx_len"):
         _write(spark, root, ctx_len=CTX * 2)
     with pytest.raises(Exception, match="geometry"):
         _write(spark, root, upsample_bp={"src1": 15_000})

@@ -92,7 +92,7 @@ def test_streaming_equals_batch_and_is_idempotent(spark, tmp_path):
 
 def test_stream_lineage_never_marks_batch_buckets_complete(spark, tmp_path):
     """Half-streamed data must not let a later batch run skip documents:
-    stream lineage lives under lineage_stream, which filter_pending ignores."""
+    stream lineage lives under lineage_stream, which batch resume ignores."""
     docs = make_docs(30)
     rows = _rows(docs)
     src = str(tmp_path / "src")

@@ -126,7 +126,8 @@ def test_redelivery_and_restart_are_idempotent(spark, tmp_path):
     )
     # parameter drift refuses before touching any store
     bad = make_curate_batch(spark, root, **{**CURATE_KW, "min_quality": 0.9})
-    with pytest.raises(ValueError, match="geometry mismatch"):
+    with pytest.raises(
+            ValueError, match=r"curate-stream geometry mismatch.*min_quality"):
         bad(frames[0], 3)
 
 
@@ -362,25 +363,47 @@ def _full_incr_snapshot(spark, root):
     }
 
 
-def test_full_tier_prefix_equality_and_promotion(spark, tmp_path):
+@pytest.fixture(scope="module")
+def full_tier_run(spark, tmp_path_factory):
+    """The full-tier batches through ONE body instance, with the promoted
+    view snapshotted after every prefix and the stores copied as batch 0
+    left them. The prefix-equality, re-delivery and restart tests all
+    start from this run, so it is made once."""
+    import shutil
+    from types import SimpleNamespace
+
+    batches, emb, media, links, kw = _full_fixture(spark)
+    base = tmp_path_factory.mktemp("full_tier")
+    root = str(base / "cif")
+    after_first = str(base / "cif_after_batch0")
+    pb = make_curate_batch(spark, root, **kw)
+    snaps = []
+    for k, rows in enumerate(batches):
+        pb(spark.createDataFrame(rows, SCHEMA), k)
+        snaps.append(_full_incr_snapshot(spark, root))
+        if k == 0:
+            shutil.copytree(root, after_first)
+    return SimpleNamespace(batches=batches, emb=emb, media=media,
+                           links=links, kw=kw, root=root, pb=pb,
+                           snaps=snaps, after_first=after_first)
+
+
+def test_full_tier_prefix_equality_and_promotion(spark, full_tier_run):
     """All-tiers prefix equality: after every monotone batch, the promoted
     incremental view (cluster-log near_dup, pair-CC semantic_dup,
     cluster-log media_dup + recomputed dup_media_frac) equals batch
     curate_corpus with segment+semantic+media on, over everything arrived.
     The batch-2 bridge (doc 21's embedding links docs 0 and 1) must FLIP
     doc 1 from kept (prefix 1) to semantic_dup (prefix 2)."""
-    batches, emb, media, links, kw = _full_fixture(spark)
-    root = str(tmp_path / "cif")
-    pb = make_curate_batch(spark, root, **kw)
+    run = full_tier_run
+    snaps = run.snaps
     seen = []
-    snaps = []
-    for k, rows in enumerate(batches):
-        pb(spark.createDataFrame(rows, SCHEMA), k)
+    for k, rows in enumerate(run.batches):
         seen += rows
-        got = _full_incr_snapshot(spark, root)
-        exp = _full_batch_snapshot(spark, seen, emb, media, links, kw)
+        got = snaps[k]
+        exp = _full_batch_snapshot(spark, seen, run.emb, run.media,
+                                   run.links, run.kw)
         assert got == exp, f"prefix {k}: {got} != {exp}"
-        snaps.append(got)
     # the engineered evidence actually fired (non-vacuous fixture)
     assert snaps[1][10][:2] == (False, "semantic_dup")   # identical embedding
     assert snaps[1][12][:2] == (False, "media_dup")      # all links visual dups
@@ -391,31 +414,29 @@ def test_full_tier_prefix_equality_and_promotion(spark, tmp_path):
     assert snaps[2][1][:2] == (False, "semantic_dup")    # ...bridged at 2
 
 
-def test_full_tier_redelivery_is_idempotent(spark, tmp_path):
-    batches, emb, media, links, kw = _full_fixture(spark)
-    root = str(tmp_path / "cif")
-    pb = make_curate_batch(spark, root, **kw)
-    for k, rows in enumerate(batches):
-        pb(spark.createDataFrame(rows, SCHEMA), k)
-    before = _full_incr_snapshot(spark, root)
-    pb(spark.createDataFrame(batches[1], SCHEMA), 1)  # replay mid batch
-    assert _full_incr_snapshot(spark, root) == before
+def test_full_tier_redelivery_is_idempotent(spark, full_tier_run):
+    run = full_tier_run
+    run.pb(spark.createDataFrame(run.batches[1], SCHEMA), 1)  # replay mid batch
+    assert _full_incr_snapshot(spark, run.root) == run.snaps[-1]
 
 
-def test_full_tier_restart_resumes_from_stores(spark, tmp_path):
+def test_full_tier_restart_resumes_from_stores(spark, full_tier_run, tmp_path):
     """A fresh batch-body instance (new process after a crash) over the
     same stores continues where the old one stopped — all three evidence
-    stores (fps/seg/dedup + sem + media) are the state, not the object."""
-    batches, emb, media, links, kw = _full_fixture(spark)
+    stores (fps/seg/dedup + sem + media) are the state, not the object.
+    The stores are the fixture run's, as its instance left them after
+    batch 0."""
+    import shutil
+
+    run = full_tier_run
     root = str(tmp_path / "cif")
-    make_curate_batch(spark, root, **kw)(
-        spark.createDataFrame(batches[0], SCHEMA), 0)
-    pb2 = make_curate_batch(spark, root, **kw)  # "restarted" instance
-    for k, rows in enumerate(batches[1:], start=1):
+    shutil.copytree(run.after_first, root)
+    pb2 = make_curate_batch(spark, root, **run.kw)  # "restarted" instance
+    for k, rows in enumerate(run.batches[1:], start=1):
         pb2(spark.createDataFrame(rows, SCHEMA), k)
-    seen = [r for b in batches for r in b]
+    seen = [r for b in run.batches for r in b]
     assert _full_incr_snapshot(spark, root) == _full_batch_snapshot(
-        spark, seen, emb, media, links, kw)
+        spark, seen, run.emb, run.media, run.links, run.kw)
 
 
 def test_model_gate_prefix_equality_and_geometry(spark, tmp_path):
