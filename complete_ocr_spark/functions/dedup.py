@@ -70,8 +70,9 @@ def minhash_lsh_buckets(df: DataFrame, id_col: str, text_col: str,
 def minhash_band_keys_df(df: DataFrame, id_col: str, text_col: str,
                          n_bands: int = 3, n_rows: int = 2) -> DataFrame:
     """Per-doc (doc, band, band_key) MinHash band keys — the banding half of
-    ``minhash_banded_buckets``, exposed so streaming dedup can index band
-    keys per document (streaming.dedup_stream.make_minhash_dedup_batch)."""
+    ``minhash_banded_buckets``, exposed as the signature of the MinHash
+    scheme of the one streaming dedup body (streaming.dedup_stream
+    ``SCHEMES["minhash"]``, built by make_minhash_dedup_batch)."""
     n_hashes = n_bands * n_rows
     words = df.select(
         F.col(id_col).alias("doc"),

@@ -1,21 +1,15 @@
-"""Catalyst form of the text-branch boilerplate strip.
-
-Same semantics as ``kernels.textstrip.strip_blocks`` (golden-tested equal end
-to end), expressed as whole-stage-codegen array expressions so the text
-branch — ~80% of spans — never crosses the Python boundary. The array form
-keeps everything span-local: no extra explode/groupBy, so the text branch
-adds NO shuffle to the pipeline.
+"""Catalyst forms of the per-block pieces of the boilerplate strip
+(``kernels.textstrip.strip_blocks``): the plain-text and anchor-length
+expressions ``queries.q_strip_text_blocks`` builds its block scores from.
 
 Dialect note: Java regex ``\\s`` is ASCII while Python ``re`` ``\\s`` on str is
 Unicode-aware; the span model's content is ASCII-whitespace only, where the
-two agree (pinned by the golden equality tests).
+two agree (pinned by the q_strip_text_blocks DuckDB oracle).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, functions as F
-
-from ..config import STRIP_MAX_LINK_DENSITY, STRIP_MIN_WORDS
 
 _A_RE = r"(?s)<a\b[^>]*>(.*?)</a>"
 
@@ -33,8 +27,8 @@ def _link_chars(block: Column) -> Column:
     be collapsed into a counted space — ``"\\tfoo bar"`` would score 8 where
     the Python kernel's ``len(" ".join(m.split()))`` scores 7. Parity covers
     ASCII whitespace only — Unicode whitespace (NBSP etc.) falls under the
-    module-level dialect contract (span content is ASCII-whitespace only,
-    pinned by the golden equality tests)."""
+    module-level dialect contract (span content is ASCII-whitespace only).
+    The tab case is pinned in tests/test_pipeline_golden.py."""
     return F.aggregate(
         F.transform(
             F.regexp_extract_all(block, F.lit(_A_RE), 1),
@@ -42,25 +36,4 @@ def _link_chars(block: Column) -> Column:
         ),
         F.lit(0),
         lambda acc, x: acc + x,
-    )
-
-
-def stripped_text(text: Column) -> Column:
-    """text -> boilerplate-stripped plain text, or NULL when no block survives
-    (the row-drop signal, mirroring strip_blocks returning None)."""
-    blocks = F.split(text, r"\n\n")
-    scored = F.transform(
-        blocks,
-        lambda b: F.struct(_plain(b).alias("plain"), _link_chars(b).alias("lc")),
-    )
-    kept = F.filter(
-        scored,
-        lambda s: (F.length(s["plain"]) > 0)
-        & (F.size(F.split(s["plain"], " ")) >= F.lit(STRIP_MIN_WORDS))
-        & ((s["lc"] / F.greatest(F.length(s["plain"]), F.lit(1)))
-           <= F.lit(STRIP_MAX_LINK_DENSITY)),
-    )
-    return F.when(
-        F.size(kept) > 0,
-        F.array_join(F.transform(kept, lambda s: s["plain"]), "\n\n"),
     )

@@ -18,7 +18,8 @@ map to ``spark.read/writeTo("iceberg.db.<table>")`` with identity
 partitioning on the same columns (this build has no Iceberg runtime jar), and
 nothing else changes. The curated outputs share ``bucket_lineage`` and the
 resume path below with ``TableIO``; every store sidecar shares
-``geometry_guard``.
+``geometry_guard``, and every streaming store's read of earlier batches is
+``prior_partitions``.
 """
 
 from __future__ import annotations
@@ -68,6 +69,26 @@ def has_parquet(path: str) -> bool:
         f.endswith(".parquet")
         for _, _, files in os.walk(path)
         for f in files
+    )
+
+
+def prior_partitions(spark: SparkSession, path: str, new: DataFrame,
+                     key: str, bid: int) -> DataFrame | None:
+    """The rows of the (batch_id, ``key``)-partitioned store at ``path``
+    that micro-batch ``bid`` can match: batches strictly before it, in the
+    ``key`` buckets the frame ``new`` touches. Both bounds are partition
+    filters, so per-batch read cost tracks |batch| x store/buckets, and a
+    re-delivered batch never reads its own partial write. The distinct-key
+    collect is a bounded driver read (at most one value per bucket). None
+    when the store has no files yet (the collect is skipped) or ``new``
+    touches no bucket: no earlier row can match."""
+    if not has_parquet(path):
+        return None
+    touched = [r[key] for r in new.select(key).distinct().collect()]
+    if not touched:
+        return None
+    return spark.read.parquet(path).filter(
+        (F.col("batch_id") < bid) & F.col(key).isin(touched)
     )
 
 

@@ -74,27 +74,7 @@ def make_extract_spans_batch(variant: str = "src"):
     return fn
 
 
-def make_extract_media_batch(variant: str = "src"):
-    """mapInPandas kernel factory for the media branch only: (doc_id, offset,
-    media_ref) rows -> flat extracted-span rows. The text branch stays
-    JVM-side (functions.stripexpr.stripped_text), so ~80% of span bytes never
-    cross the Python boundary."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: list = []
-            for doc_id, mref, off in zip(pdf["doc_id"], pdf["media_ref"], pdf["offset"]):
-                outs = extract_page_np(resolve_descriptor(mref), int(off), mref, variant)
-                rows.extend(
-                    (doc_id, off, i, k, t, m) for i, (k, t, m) in enumerate(outs)
-                )
-            yield _flat_frame(rows)
-
-    return fn
-
-
 extract_spans_batch = make_extract_spans_batch()
-extract_media_batch = make_extract_media_batch()
 
 
 LAYOUT_SCHEMA = (

@@ -23,24 +23,28 @@ stage is embarrassingly parallel, AQE coalesces the post-aggregation
 partitions, and the only per-key state is one document's output spans
 (bounded by document size, not table size).
 
-Considered and measured alternative (kept out): skew-splitting the salt —
-only docs with > T spans routed through the repartition, light docs flowing
-scan→kernel shuffle-free. On local inputs the scan-split granularity then
-bounds kernel parallelism and stragglers erase the saved shuffle (±15%,
-within this sandbox's noise); on a cluster with 128MB splits it may win —
-revisit when input sizes justify it.
+Considered and measured alternatives (kept out):
+
+* A JVM text path: text spans stripped by a Catalyst array expression
+  shuffle-free in the scan stage, only media spans crossing into Python.
+  It lost every interleaved run. 1,000 synth docs on a 4-core host,
+  local[4], noop sink, best of 4: 7.70 s (runs 7.70-8.93) against the fused
+  kernel's 5.25 s (5.25-6.82); 4,000 docs at local[32]: 4.55 s against
+  3.08 s. The per-block regexes inside higher-order functions run ~3x
+  slower on the JVM than CPython's ``re``. It was deleted; re-measure it on
+  a cluster where the text shuffle or Python worker memory is the limit.
+* Skew-splitting the salt: only docs with > T spans routed through the
+  repartition, light docs flowing scan→kernel shuffle-free. On local inputs
+  the scan-split granularity then bounds kernel parallelism and stragglers
+  erase the saved shuffle (±15%, within this sandbox's noise); on a cluster
+  with 128MB splits it may win — revisit when input sizes justify it.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .functions.stripexpr import stripped_text
-from .operators.extract import (
-    FLAT_SCHEMA,
-    make_extract_media_batch,
-    make_extract_spans_batch,
-)
+from .operators.extract import FLAT_SCHEMA, make_extract_spans_batch
 
 
 def explode_spans(docs: DataFrame) -> DataFrame:
@@ -66,62 +70,18 @@ def _seed(docs: DataFrame) -> DataFrame:
 
 def extract_flat(spark: SparkSession, docs: DataFrame,
                  n_partitions: int | None = None,
-                 text_path: str = "python",
                  variant: str = "src") -> DataFrame:
     """docs -> flat extracted-span rows (doc_id, offset, sub, kind, text,
-    media_ref), including one null seed row per doc.
-
-    ``text_path`` — MEASURED A/B (4000 docs, local[32], interleaved
-    best-of-4; both golden-exact):
-
-    * ``"python"`` (default): the fused kernel — one mapInPandas pass for
-      both span kinds after the salt repartition. 3.08 s end-to-end.
-    * ``"jvm"``: text spans stripped by the Catalyst array expression
-      (functions.stripexpr) shuffle-free in the scan stage; only media spans
-      cross into Python. 4.55 s — the per-block regexes inside higher-order
-      functions run ~3x slower on the JVM than CPython's ``re`` across the
-      32 worker processes (strip stage alone: 1.80 s vs 0.60 s). A split
-      variant keeping the strip in Python measured 3.40 s: the branch split
-      itself (double scan + union) costs more than the text shuffle saves at
-      this scale.
-
-    On a real cluster the trade flips with data volume: the jvm form shuffles
-    only ~20% of span bytes (media rows) and needs no Python worker memory
-    for the text path — re-measure there before switching the default.
-    """
+    media_ref), including one null seed row per doc: the fused kernel, one
+    mapInPandas pass for both span kinds after the salt repartition."""
     n_partitions = n_partitions or 4 * int(
         spark.conf.get("spark.sql.shuffle.partitions")
     )
-    if text_path == "python":
-        exploded = explode_spans(docs).repartition(n_partitions, "doc_id", "offset")
-        flat = exploded.mapInPandas(
-            make_extract_spans_batch(variant), schema=FLAT_SCHEMA
-        )
-        return flat.unionByName(_seed(docs))
-
-    exploded = explode_spans(docs)
-    text = (
-        exploded.filter(F.col("kind") == "text")
-        .withColumn("stripped", stripped_text(F.col("text")))
-        .filter(F.col("stripped").isNotNull())
-        .select(
-            "doc_id",
-            "offset",
-            F.lit(0).cast("int").alias("sub"),
-            F.lit("text").alias("kind"),
-            F.col("stripped").alias("text"),
-            F.lit(None).cast("string").alias("media_ref"),
-        )
+    exploded = explode_spans(docs).repartition(n_partitions, "doc_id", "offset")
+    flat = exploded.mapInPandas(
+        make_extract_spans_batch(variant), schema=FLAT_SCHEMA
     )
-    media = (
-        exploded.filter(
-            (F.col("kind") == "media_ref") & F.col("media_ref").isNotNull()
-        )
-        .select("doc_id", "offset", "media_ref")
-        .repartition(n_partitions, "doc_id", "offset")
-        .mapInPandas(make_extract_media_batch(variant), schema=FLAT_SCHEMA)
-    )
-    return text.unionByName(media).unionByName(_seed(docs))
+    return flat.unionByName(_seed(docs))
 
 
 def reassemble(flat: DataFrame) -> DataFrame:
@@ -148,11 +108,10 @@ def run_extraction(
     spark: SparkSession,
     docs: DataFrame,
     n_partitions: int | None = None,
-    text_path: str = "python",
     variant: str = "src",
 ) -> DataFrame:
     """docs(doc_id, spans) -> docs_out(doc_id, spans) with extracted content.
 
     ``variant``: "src" (Current Version figure semantics) or "optimized"
     (optimized_code's figure-detect-on-masked-array semantics)."""
-    return reassemble(extract_flat(spark, docs, n_partitions, text_path, variant))
+    return reassemble(extract_flat(spark, docs, n_partitions, variant))

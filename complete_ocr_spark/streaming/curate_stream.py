@@ -117,6 +117,7 @@ from .dedup_stream import (
 )
 from .segment_stream import (
     _fb,
+    _first_arrival_dups,
     make_segment_dedup_batch,
     read_segment_spans,
 )
@@ -325,32 +326,16 @@ def make_curate_batch(spark: SparkSession, out_root: str,
         )
         passed = ann.filter(F.col("_hr").isNull()).select(id_col, text_col)
         # 2. exact tier: fp store probe with the strictly-earlier rule
-        # (segment_stream pattern: fb-pruned scan, canon owner groupBy);
-        # a narrow projection of the checkpointed rows, not a new job
+        # (the segment_stream owner probe: fb-pruned scan, canon owner
+        # groupBy); a narrow projection of the checkpointed rows, not a
+        # new job
         fps = (
             ann.filter(F.col("_hr").isNull())
             .select(F.col(id_col).alias("doc"), "fp", "fb")
             .withColumn("batch_id", F.lit(bid))
         )
-        touched = [r["fb"] for r in fps.select("fb").distinct().collect()]
-        if has_parquet(paths["fps"]):
-            prior = (
-                spark.read.parquet(paths["fps"])
-                .filter((F.col("batch_id") < bid) & F.col("fb").isin(touched))
-                .select("doc", "fp", "batch_id")
-            )
-            corpus = prior.unionByName(fps.select("doc", "fp", "batch_id"))
-        else:
-            corpus = fps.select("doc", "fp", "batch_id")
-        owner = corpus.groupBy("fp").agg(
-            F.min(F.struct("batch_id", "doc")).alias("o")
-        )
         exact_drops = (
-            fps.join(owner, "fp")
-            .filter(
-                F.struct(F.col("batch_id"), F.col("doc").alias("doc"))
-                > F.col("o")
-            )
+            _first_arrival_dups(spark, paths["fps"], fps, bid)
             .select("doc")
             .localCheckpoint()  # feeds the survivor anti-join AND the audit
         )

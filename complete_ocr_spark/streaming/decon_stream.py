@@ -89,7 +89,7 @@ def read_decon_incr(spark: SparkSession, out_root: str,
     if not has_parquet(flag_path):
         return spark.createDataFrame(
             [], f"doc_id {id_type}, n_grams bigint, n_hits bigint, "
-                f"contamination double, batch_id bigint")
+                f"contamination double, batch_id int")
     return spark.read.parquet(flag_path)
 
 

@@ -2,9 +2,14 @@
 
 Beyond-reference scope (the reference is strictly batch): a training-data
 pipeline deduplicates each new document against the corpus it has ALREADY
-ingested, not against a frozen snapshot. This module maintains a SimHash-64
-signature table under ``foreachBatch`` and flags every arriving document
-whose signature is within ``max_hamming`` of an earlier one.
+ingested, not against a frozen snapshot. This module maintains a banded
+signature store under ``foreachBatch`` and flags every arriving document
+that matches an earlier one. ONE body (``_make_dedup_body``) serves both
+schemes in ``SCHEMES``: SimHash-64 (``make_dedup_batch``: a match is within
+``max_hamming`` bits) and MinHash (``make_minhash_dedup_batch``: a match
+shares a band key, Jaccard space). A scheme contributes only its band keys,
+its match function and its flag score; the probe, the writes and the
+cluster log below are shared. The SimHash form is described here.
 
 Semantics (deterministic, so re-delivery is idempotent):
 
@@ -25,7 +30,7 @@ with dynamic partition overwrite keyed by ``batch_id`` (the index also by
 ``batch_id < k`` (its own failed partial write is excluded by the filter)
 and replaces exactly its own partitions. The corpus probe reads the BAND
 INDEX partition-pruned to the vb buckets the batch's own band values hash
-into (``make_dedup_batch``), so per-batch read cost tracks the batch size,
+into (``io.prior_partitions``), so per-batch read cost tracks the batch size,
 not the corpus size, and the join cost is |batch| x corpus collisions.
 
 ONLINE CLUSTERS: pairwise flags go stale when an arriving doc BRIDGES two
@@ -42,6 +47,9 @@ the recursive-CTE connected-components oracle).
 from __future__ import annotations
 
 import os
+from functools import reduce
+from operator import and_
+from typing import Callable, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
@@ -51,6 +59,7 @@ from ..io import (
     geometry_guard,
     has_parquet,
     parallel_actions,
+    prior_partitions,
     require_local,
     write_partitioned,
 )
@@ -77,8 +86,8 @@ def dedup_paths(out_root: str) -> tuple[str, str, str]:
 
 
 def _stored_scheme(out_root: str) -> str | None:
-    """The scheme persisted in _dedup_geometry.json, if any (the SimHash
-    body predates the key, so its geometries have none)."""
+    """The scheme persisted in _dedup_geometry.json, if any (SimHash
+    geometries predate the key, so they have none)."""
     import json
 
     path = os.path.join(out_root, "_dedup_geometry.json")
@@ -111,13 +120,13 @@ def read_flags(spark: SparkSession, out_root: str,
         scheme = _stored_scheme(out_root) or "simhash"
     if scheme.startswith("simhash-sig:"):
         scheme = "simhash"  # injected kernels flag on the simhash schema
-    scores = {"simhash": "hamming int", "minhash": "n_bands_hit bigint"}
-    if scheme not in scores:
-        raise ValueError(f"unknown dedup scheme {scheme!r}; one of {sorted(scores)}")
+    if scheme not in SCHEMES:
+        raise ValueError(f"unknown dedup scheme {scheme!r}; one of {sorted(SCHEMES)}")
+    s = SCHEMES[scheme]
     return spark.createDataFrame(
         [],
         f"doc {id_type}, dup_of {id_type}, dup_batch int, "
-        f"{scores[scheme]}, batch_id int",
+        f"{s.score} {s.score_type}, batch_id int",
     )
 
 
@@ -131,6 +140,11 @@ def cluster_paths(out_root: str) -> tuple[str, str]:
         os.path.join(out_root, "assignments"),
         os.path.join(out_root, "label_moves"),
     )
+
+
+def _doc_bucket(col: str, n_doc_buckets: int):
+    """db = pmod(xxhash64(doc), n_doc_buckets): the doc-keyed stores' bucket."""
+    return F.pmod(F.xxhash64(col), F.lit(n_doc_buckets)).cast("int")
 
 
 def _bands(sigs: DataFrame, n_blocks: int, max_hamming: int) -> DataFrame:
@@ -147,10 +161,32 @@ def near_dup_flags(new_sigs: DataFrame, corpus_sigs: DataFrame,
 
     Returns (doc, batch_id, dup_of, dup_batch, hamming) — one row per flagged
     doc, ``dup_of`` = the earlier match minimizing (hamming, doc id)."""
-    return _flags_from_bands(
+    return _flags_from_matches(_matches_from_bands(
         _bands(new_sigs, n_blocks, max_hamming),
         _bands(corpus_sigs, n_blocks, max_hamming),
         max_hamming,
+    ))
+
+
+def _earlier_pairs(new: DataFrame, corpus: DataFrame, keys: tuple[str, ...],
+                   *cols) -> DataFrame:
+    """(doc, batch_id, dup_of, dup_batch, *cols) for every ``new`` row
+    (alias n) and ``corpus`` row (alias c) with equal ``keys`` where the
+    corpus row arrived STRICTLY earlier: an earlier batch, or the same batch
+    and a smaller doc id (within-batch order). Both sides carry doc and
+    batch_id."""
+    n, c = new.alias("n"), corpus.alias("c")
+    earlier = (F.col("c.batch_id") < F.col("n.batch_id")) | (
+        (F.col("c.batch_id") == F.col("n.batch_id"))
+        & (F.col("c.doc") < F.col("n.doc"))
+    )
+    same = reduce(and_, [F.col(f"n.{k}") == F.col(f"c.{k}") for k in keys])
+    return n.join(c, same & earlier).select(
+        F.col("n.doc").alias("doc"),
+        F.col("n.batch_id").alias("batch_id"),
+        F.col("c.doc").alias("dup_of"),
+        F.col("c.batch_id").alias("dup_batch"),
+        *cols,
     )
 
 
@@ -162,38 +198,38 @@ def _matches_from_bands(new_bands: DataFrame, corpus_bands: DataFrame,
     per doc; cluster maintenance needs every match (a new doc near two
     clusters BRIDGES them, which the best-only flag cannot express)."""
     cols = ["doc", "batch_id", "simhash_hi", "simhash_lo", "band", "value"]
-    n = new_bands.select(cols).alias("n")
-    c = corpus_bands.select(cols).alias("c")
-    earlier = (F.col("c.batch_id") < F.col("n.batch_id")) | (
-        (F.col("c.batch_id") == F.col("n.batch_id"))
-        & (F.col("c.doc") < F.col("n.doc"))
-    )
     ham = (
         F.bit_count(F.col("n.simhash_hi").bitwiseXOR(F.col("c.simhash_hi")))
         + F.bit_count(F.col("n.simhash_lo").bitwiseXOR(F.col("c.simhash_lo")))
     ).cast("int")
     return (
-        n.join(
-            c,
-            (F.col("n.band") == F.col("c.band"))
-            & (F.col("n.value") == F.col("c.value"))
-            & earlier,
-        )
-        .select(
-            F.col("n.doc").alias("doc"),
-            F.col("n.batch_id").alias("batch_id"),
-            F.col("c.doc").alias("dup_of"),
-            F.col("c.batch_id").alias("dup_batch"),
-            ham.alias("hamming"),
-        )
+        _earlier_pairs(new_bands.select(cols), corpus_bands.select(cols),
+                       ("band", "value"), ham.alias("hamming"))
         .filter(F.col("hamming") <= max_hamming)
         .distinct()  # a true pair co-matches in up to n_bands bands
     )
 
 
-def _flags_from_matches(matches: DataFrame) -> DataFrame:
-    """Best match per doc: minimize (hamming, dup_of, dup_batch)."""
-    best = F.min(F.struct("hamming", "dup_of", "dup_batch")).alias("m")
+def _minhash_matches(new_bands: DataFrame, corpus_bands: DataFrame) -> DataFrame:
+    """All MinHash band-collision pairs with their co-matching band count
+    ``n_bands_hit`` (banding IS the candidate test: no residual verify)."""
+    return (
+        _earlier_pairs(new_bands, corpus_bands, ("band", "value"))
+        .groupBy("doc", "batch_id", "dup_of", "dup_batch")
+        .agg(F.count("*").alias("n_bands_hit"))
+    )
+
+
+def _flags_from_matches(matches: DataFrame, score: str = "hamming",
+                        desc: bool = False) -> DataFrame:
+    """Best match per doc: the lowest ``score`` (the highest when ``desc``),
+    ties to the smallest (dup_of, dup_batch)."""
+    def rank(c):
+        return -c if desc else c
+
+    best = F.min(
+        F.struct(rank(F.col(score)).alias("s"), "dup_of", "dup_batch")
+    ).alias("m")
     return (
         matches.groupBy("doc", "batch_id")
         .agg(best)
@@ -201,18 +237,40 @@ def _flags_from_matches(matches: DataFrame) -> DataFrame:
             "doc", "batch_id",
             F.col("m.dup_of").alias("dup_of"),
             F.col("m.dup_batch").alias("dup_batch"),
-            F.col("m.hamming").alias("hamming"),
+            rank(F.col("m.s")).alias(score),
         )
     )
 
 
-def _flags_from_bands(new_bands: DataFrame, corpus_bands: DataFrame,
-                      max_hamming: int) -> DataFrame:
-    """The banded equi-join + popcount verify + min-match pick, over
-    pre-banded rows (doc, batch_id, simhash_hi, simhash_lo, band, value)."""
-    return _flags_from_matches(
-        _matches_from_bands(new_bands, corpus_bands, max_hamming)
-    )
+class _Scheme(NamedTuple):
+    """What one incremental dedup scheme adds to the shared foreachBatch
+    body (``_make_dedup_body``); the probe, the writes and the cluster log
+    are common. ``bands`` and ``matches`` read their banding parameters
+    from the store's geometry dict."""
+    score: str       # flag score column ...
+    score_type: str  # ... and its type, as a real read infers it
+    desc: bool       # the best match has the HIGHEST score
+    sig_table: bool  # a signature table apart from the band index
+    bands: Callable[[DataFrame, dict], DataFrame]  # signature rows -> bands
+    matches: Callable[[DataFrame, DataFrame, dict], DataFrame]
+
+
+SCHEMES = {
+    # Hamming distance over SimHash-64; the band index derives from the
+    # signature table (and is rebuilt from it when missing)
+    "simhash": _Scheme(
+        "hamming", "int", False, True,
+        lambda sigs, g: _bands(sigs, g["n_blocks"], g["max_hamming"]),
+        lambda n, c, g: _matches_from_bands(n, c, g["max_hamming"]),
+    ),
+    # MinHash band collisions: the per-doc band-key rows ARE the
+    # signature, so the band index is the signature table
+    "minhash": _Scheme(
+        "n_bands_hit", "bigint", True, False,
+        lambda rows, g: rows,
+        lambda n, c, g: _minhash_matches(n, c),
+    ),
+}
 
 
 def _batch_dirs(path: str) -> set[int]:
@@ -368,29 +426,20 @@ def _update_clusters(spark: SparkSession, out_root: str, batch_docs: DataFrame,
     earlier = matches.filter(F.col("dup_batch") < bid).select("doc", "dup_of")
     edges = within
     prior_roots = None
-    if has_parquet(asg_path):
-        # One partition-pruned assignment lookup serves both prior-label
-        # uses: labels of MATCHED earlier docs (mini-graph root nodes) and
-        # labels of RE-CRAWLED batch docs (same id, later batch).
-        lookup = (
-            batch_docs.unionByName(
-                earlier.select(F.col("dup_of").alias("doc"))
-            )
-            .distinct()
-            .withColumn(
-                "db", F.pmod(F.xxhash64("doc"), F.lit(n_doc_buckets)).cast("int")
-            )
-        )
-        # bounded driver read: at most n_doc_buckets values
-        touched = [r["db"] for r in lookup.select("db").distinct().collect()]
-        prior_asg = (
-            spark.read.parquet(asg_path)
-            .filter((F.col("batch_id") < bid) & F.col("db").isin(touched))
-            .select("doc", "label")
-        )
+    # One partition-pruned assignment lookup serves both prior-label uses:
+    # labels of MATCHED earlier docs (mini-graph root nodes) and labels of
+    # RE-CRAWLED batch docs (same id, later batch).
+    lookup = (
+        batch_docs.unionByName(earlier.select(F.col("dup_of").alias("doc")))
+        .distinct()
+        .withColumn("db", _doc_bucket("doc", n_doc_buckets))
+    )
+    prior_asg = prior_partitions(spark, asg_path, lookup, "db", bid)
+    if prior_asg is not None:
         moves = _read_moves(spark, mov_path, id_type, before_batch=bid)
         prior_roots = _apply_moves(
-            lookup.select("doc").join(prior_asg, "doc"), moves
+            lookup.select("doc").join(prior_asg.select("doc", "label"), "doc"),
+            moves,
         ).localCheckpoint()
         # matched earlier docs link the new doc to their cluster root
         e2 = (
@@ -420,7 +469,7 @@ def _update_clusters(spark: SparkSession, out_root: str, batch_docs: DataFrame,
         batch_docs.join(cc.select("doc", "cluster"), "doc", "left")
         .select("doc", F.coalesce("cluster", F.col("doc")).alias("label"))
         .withColumn("batch_id", F.lit(bid))
-        .withColumn("db", F.pmod(F.xxhash64("doc"), F.lit(n_doc_buckets)).cast("int"))
+        .withColumn("db", _doc_bucket("doc", n_doc_buckets))
     )
     def _write_asg():
         write_partitioned(asg_new.repartition(n_doc_buckets, "db"), asg_path,
@@ -525,6 +574,122 @@ def compact_cluster_log(spark: SparkSession, out_root: str) -> None:
     shutil.rmtree(mov_path)
 
 
+def _make_dedup_body(spark: SparkSession, out_root: str, scheme: str,
+                     geometry: dict, sign, maintain_clusters: bool,
+                     n_doc_buckets: int, maintenance_every: int | None):
+    """The one incremental dedup foreachBatch body. ``sign(batch_df)``
+    gives the batch's signature rows (doc, ...); ``SCHEMES[scheme]`` bands
+    and matches them and ranks the flags. ``geometry`` is the persisted
+    sidecar and carries the banding parameters. The probe reads the band
+    index (Manku: one table per band) pruned to the batch's own vb buckets
+    (module doc); size n_value_buckets ~ the corpus partition count at
+    deployment, 16 here keeps the sandbox's file count sane."""
+    if maintenance_every is not None and maintenance_every < 1:
+        raise ValueError(f"maintenance_every must be >= 1, got {maintenance_every}")
+    out_root = require_local(out_root, "streaming-dedup out_root")
+    sch = SCHEMES[scheme]
+    sig_path, flag_path, band_path = dedup_paths(out_root)
+    table_path = sig_path if sch.sig_table else band_path
+    n_value_buckets = geometry["n_value_buckets"]
+
+    def _bands_vb(sigs: DataFrame) -> DataFrame:
+        return sch.bands(sigs, geometry).withColumn(
+            "vb", F.pmod(F.col("value"), F.lit(n_value_buckets)).cast("int")
+        )
+
+    def _rebuild_band_index(bid: int) -> None:
+        """Signatures exist but the band index doesn't (pre-index layout, or
+        a wiped index): rebuild it — the index is a pure derivation of the
+        signature table, so resuming with an empty one would silently treat
+        the corpus as empty and un-flag every cross-batch duplicate."""
+        prior_sigs = spark.read.parquet(sig_path).filter(F.col("batch_id") < bid)
+        write_partitioned(_bands_vb(prior_sigs).repartition(n_value_buckets, "vb"),
+                          band_path, "batch_id", "vb")
+
+    def _rebuild_cluster_log(backlog: list[int]) -> None:
+        """The cluster log is behind the signature table (pre-cluster layout,
+        a wiped log, or a crashed earlier replay): REPLAY cluster maintenance
+        for exactly the missing batches, in order. Unlike the band index (a
+        stateless derivation, rebuilt in one pass) the cluster log is
+        order-dependent — resuming with an empty or truncated one would
+        silently mislabel earlier docs. _update_clusters is idempotent per
+        batch, so re-running the possibly-partial boundary batch is safe."""
+        all_sigs = (
+            spark.read.parquet(table_path)
+            .filter(F.col("batch_id") <= max(backlog))
+            .localCheckpoint()
+        )
+        all_bands = sch.bands(all_sigs, geometry)
+        for k in backlog:
+            m = sch.matches(
+                all_bands.filter(F.col("batch_id") == k),
+                all_bands.filter(F.col("batch_id") <= k),
+                geometry,
+            ).localCheckpoint()
+            _update_clusters(
+                spark, out_root,
+                all_sigs.filter(F.col("batch_id") == k).select("doc").distinct(),
+                m, k, n_doc_buckets,
+            )
+
+    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
+        bid = int(batch_id)
+        if batch_df.isEmpty():
+            # nothing to sign, flag, or index — make the no-op explicit
+            # instead of relying on isin([])-is-false and empty-frame writes
+            return
+        geometry_guard(out_root, geometry)
+        if sch.sig_table and has_parquet(sig_path) and not has_parquet(band_path):
+            _rebuild_band_index(bid)
+        if maintain_clusters:
+            backlog = _cluster_backlog(
+                table_path, cluster_paths(out_root)[0], bid
+            )
+            if backlog:
+                _rebuild_cluster_log(backlog)
+        # localCheckpoint: the signature kernel output feeds the touched-
+        # bucket probe, both flag-join sides, the writes and the cluster log
+        # — Spark does not reuse exchanges across them, so materialize the
+        # batch-sized result once instead of re-running the kernel per use
+        sigs = sign(batch_df).withColumn("batch_id", F.lit(bid)).localCheckpoint()
+        new_bands = _bands_vb(sigs)
+        prior = prior_partitions(spark, band_path, new_bands, "vb", bid)
+        corpus_bands = new_bands if prior is None else prior.unionByName(new_bands)
+        # the full match set feeds BOTH the flag view and cluster maintenance
+        # — materialize it once (batch-sized)
+        matches = sch.matches(new_bands, corpus_bands, geometry).localCheckpoint()
+        flags = _flags_from_matches(matches, sch.score, sch.desc)
+        # The store writes are INDEPENDENT (each overwrites only its own
+        # batch_id=bid partitions; their plans read the checkpointed
+        # sigs/matches frames, never each other's store), so they overlap
+        # (io.parallel_actions — guide §2.6): each job is commit/file-
+        # latency-bound with most cores idle. A crash mid-batch leaves any
+        # subset written; re-delivery overwrites all deterministically.
+        # flags may be empty for a batch; the partition column is still
+        # recorded via an explicit lit.
+        writes = [
+            lambda: write_partitioned(
+                new_bands.repartition(n_value_buckets, "vb"), band_path,
+                "batch_id", "vb"),
+            lambda: write_partitioned(
+                flags.withColumn("batch_id", F.lit(bid))  # restore post-agg
+                .coalesce(1), flag_path, "batch_id"),
+        ]
+        if sch.sig_table:
+            writes.insert(0, lambda: write_partitioned(
+                sigs.coalesce(1), sig_path, "batch_id"))
+        parallel_actions(*writes)
+        if maintain_clusters:
+            _update_clusters(
+                spark, out_root, sigs.select("doc").distinct(), matches,
+                bid, n_doc_buckets,
+            )
+            if maintenance_every and (bid + 1) % maintenance_every == 0:
+                compact_cluster_log(spark, out_root)
+
+    return process_batch
+
+
 def make_dedup_batch(spark: SparkSession, out_root: str,
                      id_col: str = "doc_id", text_col: str = "text",
                      max_hamming: int = 3, n_blocks: int = 4,
@@ -533,7 +698,8 @@ def make_dedup_batch(spark: SparkSession, out_root: str,
                      n_doc_buckets: int = N_DOC_BUCKETS,
                      sig_fn=None,
                      maintenance_every: int | None = None):
-    """foreachBatch body, exposed for direct re-delivery testing.
+    """SimHash foreachBatch body (``_make_dedup_body``), exposed for direct
+    re-delivery testing.
 
     ``maintenance_every=K`` runs ``compact_cluster_log`` from inside the
     foreachBatch body after every K-th batch (bid + 1 divisible by K), so
@@ -546,20 +712,7 @@ def make_dedup_batch(spark: SparkSession, out_root: str,
     per batch (``_update_clusters``); ``sig_fn(batch_df, id_col, text_col) ->
     (doc, simhash_hi, simhash_lo)`` overrides the signature kernel — tests
     inject hand-built signatures to pin exact Hamming geometries the text
-    kernel cannot be steered to.
-
-    The corpus side of the probe is the BAND INDEX (Manku stores one table
-    per band), partitioned by (batch_id, vb = pmod(value, n_value_buckets)):
-    a micro-batch lists the <= n_value_buckets vb partitions its own band
-    values hash into and the corpus scan partition-prunes to exactly those —
-    per-batch read cost tracks |batch| x corpus/n_value_buckets instead of
-    the whole signature corpus. Size n_value_buckets ~ the corpus partition
-    count at deployment (a small batch then touches a sliver); 16 here keeps
-    the sandbox's file count sane."""
-    if maintenance_every is not None and maintenance_every < 1:
-        raise ValueError(f"maintenance_every must be >= 1, got {maintenance_every}")
-    out_root = require_local(out_root, "streaming-dedup out_root")
-    sig_path, flag_path, band_path = dedup_paths(out_root)
+    kernel cannot be steered to."""
     geometry = {
         "n_blocks": n_blocks,
         "max_hamming": max_hamming,
@@ -578,116 +731,12 @@ def make_dedup_batch(spark: SparkSession, out_root: str,
         # the assignment table's db partitioning is part of the on-disk
         # contract too — a bucket-count change would mis-prune label lookups
         geometry["n_doc_buckets"] = n_doc_buckets
-    if sig_fn is None:
-        sig_fn = simhash64
-
-    def _rebuild_band_index(bid: int) -> None:
-        """Signatures exist but the band index doesn't (pre-index layout, or
-        a wiped index): rebuild it — the index is a pure derivation of the
-        signature table, so resuming with an empty one would silently treat
-        the corpus as empty and un-flag every cross-batch duplicate."""
-        prior_sigs = spark.read.parquet(sig_path).filter(F.col("batch_id") < bid)
-        rebuilt = _bands(prior_sigs, n_blocks, max_hamming).withColumn(
-            "vb", F.pmod(F.col("value"), F.lit(n_value_buckets)).cast("int")
-        )
-        write_partitioned(rebuilt.repartition(n_value_buckets, "vb"),
-                          band_path, "batch_id", "vb")
-
-    def _rebuild_cluster_log(backlog: list[int]) -> None:
-        """The cluster log is behind the signature table (pre-cluster layout,
-        a wiped log, or a crashed earlier replay): REPLAY cluster maintenance
-        for exactly the missing batches, in order. Unlike the band index (a
-        stateless derivation, rebuilt in one pass) the cluster log is
-        order-dependent — resuming with an empty or truncated one would
-        silently mislabel earlier docs. _update_clusters is idempotent per
-        batch, so re-running the possibly-partial boundary batch is safe."""
-        all_sigs = (
-            spark.read.parquet(sig_path)
-            .filter(F.col("batch_id") <= max(backlog))
-            .localCheckpoint()
-        )
-        all_bands = _bands(all_sigs, n_blocks, max_hamming)
-        for k in backlog:
-            m = _matches_from_bands(
-                all_bands.filter(F.col("batch_id") == k),
-                all_bands.filter(F.col("batch_id") <= k),
-                max_hamming,
-            ).localCheckpoint()
-            _update_clusters(
-                spark, out_root,
-                all_sigs.filter(F.col("batch_id") == k).select("doc").distinct(),
-                m, k, n_doc_buckets,
-            )
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        bid = int(batch_id)
-        if batch_df.isEmpty():
-            # nothing to sign, flag, or index — make the no-op explicit
-            # instead of relying on isin([])-is-false and empty-frame writes
-            return
-        geometry_guard(out_root, geometry)
-        if has_parquet(sig_path) and not has_parquet(band_path):
-            _rebuild_band_index(bid)
-        if maintain_clusters:
-            backlog = _cluster_backlog(
-                sig_path, cluster_paths(out_root)[0], bid
-            )
-            if backlog:
-                _rebuild_cluster_log(backlog)
-        # localCheckpoint: the signature kernel output feeds FOUR consumers
-        # (touched-bucket probe, both flag-join sides, two writes) and Spark
-        # does not reuse exchanges across them — materialize the batch-sized
-        # result once instead of re-running the kernel per consumer
-        sigs = (
-            sig_fn(batch_df, id_col, text_col)
-            .withColumn("batch_id", F.lit(bid))
-            .localCheckpoint()
-        )
-        new_bands = _bands(sigs, n_blocks, max_hamming).withColumn(
-            "vb", F.pmod(F.col("value"), F.lit(n_value_buckets)).cast("int")
-        )
-        # bounded driver read: at most n_value_buckets values
-        touched = [r["vb"] for r in new_bands.select("vb").distinct().collect()]
-        if has_parquet(band_path):
-            prior_bands = (
-                spark.read.parquet(band_path)
-                .filter((F.col("batch_id") < bid) & F.col("vb").isin(touched))
-            )
-            corpus_bands = prior_bands.unionByName(new_bands)
-        else:
-            corpus_bands = new_bands
-        # the full match set feeds BOTH the flag view and cluster maintenance
-        # — materialize it once (batch-sized)
-        matches = _matches_from_bands(
-            new_bands, corpus_bands, max_hamming
-        ).localCheckpoint()
-        flags = _flags_from_matches(matches)
-        # The three store writes are INDEPENDENT (each overwrites only its
-        # own batch_id=bid partitions; their plans read the checkpointed
-        # sigs/matches frames, never each other's store), so they overlap
-        # (io.parallel_actions — guide §2.6): each job is commit/file-
-        # latency-bound with most cores idle. A crash mid-batch leaves any
-        # subset written — exactly as before, re-delivery overwrites all
-        # three deterministically. flags may be empty for a batch; the
-        # partition column is still recorded via an explicit lit.
-        parallel_actions(
-            lambda: write_partitioned(sigs.coalesce(1), sig_path, "batch_id"),
-            lambda: write_partitioned(
-                new_bands.repartition(n_value_buckets, "vb"), band_path,
-                "batch_id", "vb"),
-            lambda: write_partitioned(
-                flags.withColumn("batch_id", F.lit(bid))  # restore post-agg
-                .coalesce(1), flag_path, "batch_id"),
-        )
-        if maintain_clusters:
-            _update_clusters(
-                spark, out_root, sigs.select("doc").distinct(), matches,
-                bid, n_doc_buckets,
-            )
-            if maintenance_every and (bid + 1) % maintenance_every == 0:
-                compact_cluster_log(spark, out_root)
-
-    return process_batch
+    sig_fn = sig_fn or simhash64
+    return _make_dedup_body(
+        spark, out_root, "simhash", geometry,
+        lambda df: sig_fn(df, id_col, text_col),
+        maintain_clusters, n_doc_buckets, maintenance_every,
+    )
 
 
 def make_minhash_dedup_batch(spark: SparkSession, out_root: str,
@@ -697,11 +746,11 @@ def make_minhash_dedup_batch(spark: SparkSession, out_root: str,
                              maintain_clusters: bool = True,
                              n_doc_buckets: int = N_DOC_BUCKETS,
                              maintenance_every: int | None = None):
-    """foreachBatch body for JACCARD-space incremental dedup: the same
-    banded-index machinery as the SimHash body, with MinHash (bands x rows)
-    band keys (functions.dedup.minhash_band_keys_df) as the signature.
+    """foreachBatch body for JACCARD-space incremental dedup: the shared
+    body (``_make_dedup_body``) with MinHash (bands x rows) band keys
+    (functions.dedup.minhash_band_keys_df) as the signature.
 
-    Differences from the SimHash path, both intrinsic to MinHash-LSH:
+    Differences from the SimHash scheme, both intrinsic to MinHash-LSH:
 
     * the per-doc band-key VECTOR is the signature — the band index IS the
       signature table (one table, no separate sig parquet, no band-index
@@ -715,18 +764,11 @@ def make_minhash_dedup_batch(spark: SparkSession, out_root: str,
     The 128-bit md5 band key is truncated to its first 15 hex digits as a
     BIGINT ``value`` (the shared index layout): truncation adds ~2^-60 junk
     collisions per pair — far below the banding false-positive rate itself.
-
-    Geometry (scheme, bands, rows, buckets) persists via the same guard;
-    an index built by the SimHash body refuses MinHash probes and vice
-    versa. Flags/index/cluster writes keep batch-partitioned dynamic
-    overwrite, so re-delivery stays idempotent; ``_update_clusters``
-    maintains the same online cluster log off the match set."""
+    Geometry (scheme, bands, rows, buckets) persists via the same guard, so
+    an index built by the SimHash scheme refuses MinHash probes and vice
+    versa."""
     from ..functions.dedup import minhash_band_keys_df
 
-    if maintenance_every is not None and maintenance_every < 1:
-        raise ValueError(f"maintenance_every must be >= 1, got {maintenance_every}")
-    out_root = require_local(out_root, "streaming-dedup out_root")
-    _, flag_path, band_path = dedup_paths(out_root)
     geometry = {
         "scheme": "minhash",
         "n_bands": n_bands,
@@ -736,114 +778,14 @@ def make_minhash_dedup_batch(spark: SparkSession, out_root: str,
     if maintain_clusters:
         geometry["n_doc_buckets"] = n_doc_buckets
 
-    def _minhash_matches(new_b: DataFrame, corpus_b: DataFrame) -> DataFrame:
-        """All band-collision matches with co-matching band counts."""
-        n, c = new_b.alias("n"), corpus_b.alias("c")
-        earlier = (F.col("c.batch_id") < F.col("n.batch_id")) | (
-            (F.col("c.batch_id") == F.col("n.batch_id"))
-            & (F.col("c.doc") < F.col("n.doc"))
-        )
-        return (
-            n.join(
-                c,
-                (F.col("n.band") == F.col("c.band"))
-                & (F.col("n.value") == F.col("c.value"))
-                & earlier,
-            )
-            .groupBy(
-                F.col("n.doc").alias("doc"),
-                F.col("n.batch_id").alias("batch_id"),
-                F.col("c.doc").alias("dup_of"),
-                F.col("c.batch_id").alias("dup_batch"),
-            )
-            .agg(F.count("*").alias("n_bands_hit"))
+    def sign(df: DataFrame) -> DataFrame:
+        return minhash_band_keys_df(df, id_col, text_col, n_bands, n_rows).select(
+            "doc", "band",
+            F.conv(F.substring("band_key", 1, 15), 16, 10).cast("bigint").alias("value"),
         )
 
-    def _rebuild_cluster_log(backlog: list[int]) -> None:
-        """The cluster log is behind the band table (the MinHash signature
-        table): replay maintenance for exactly the missing batches, as the
-        SimHash body does — a truncated log would silently drop earlier docs
-        from their clusters. Re-running the boundary batch is idempotent."""
-        all_bands = (
-            spark.read.parquet(band_path)
-            .filter(F.col("batch_id") <= max(backlog))
-            .localCheckpoint()
-        )
-        for k in backlog:
-            m = _minhash_matches(
-                all_bands.filter(F.col("batch_id") == k),
-                all_bands.filter(F.col("batch_id") <= k),
-            ).localCheckpoint()
-            _update_clusters(
-                spark, out_root,
-                all_bands.filter(F.col("batch_id") == k).select("doc").distinct(),
-                m, k, n_doc_buckets,
-            )
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        bid = int(batch_id)
-        if batch_df.isEmpty():
-            return
-        geometry_guard(out_root, geometry)
-        if maintain_clusters:
-            backlog = _cluster_backlog(
-                band_path, cluster_paths(out_root)[0], bid
-            )
-            if backlog:
-                _rebuild_cluster_log(backlog)
-        new_bands = (
-            minhash_band_keys_df(batch_df, id_col, text_col, n_bands, n_rows)
-            .select(
-                "doc", "band",
-                F.conv(F.substring("band_key", 1, 15), 16, 10)
-                .cast("bigint").alias("value"),
-            )
-            .withColumn("batch_id", F.lit(bid))
-            .withColumn(
-                "vb", F.pmod(F.col("value"), F.lit(n_value_buckets)).cast("int")
-            )
-            .localCheckpoint()  # feeds probe, join sides, write, clusters
-        )
-        touched = [r["vb"] for r in new_bands.select("vb").distinct().collect()]
-        if has_parquet(band_path):
-            prior = (
-                spark.read.parquet(band_path)
-                .filter((F.col("batch_id") < bid) & F.col("vb").isin(touched))
-            )
-            corpus_bands = prior.unionByName(new_bands)
-        else:
-            corpus_bands = new_bands
-        matches = _minhash_matches(new_bands, corpus_bands).localCheckpoint()
-        # best match = most co-matching bands, then smallest (dup_of, batch)
-        best = F.min(
-            F.struct(
-                (-F.col("n_bands_hit")).alias("neg"), "dup_of", "dup_batch"
-            )
-        ).alias("m")
-        flags = (
-            matches.groupBy("doc", "batch_id")
-            .agg(best)
-            .select(
-                "doc", "batch_id",
-                F.col("m.dup_of").alias("dup_of"),
-                F.col("m.dup_batch").alias("dup_batch"),
-                (-F.col("m.neg")).cast("bigint").alias("n_bands_hit"),
-            )
-        )
-        write_partitioned(new_bands.repartition(n_value_buckets, "vb"),
-                          band_path, "batch_id", "vb")
-        write_partitioned(flags.withColumn("batch_id", F.lit(bid)).coalesce(1),
-                          flag_path, "batch_id")
-        if maintain_clusters:
-            _update_clusters(
-                spark, out_root,
-                new_bands.select("doc").distinct(),
-                matches, bid, n_doc_buckets,
-            )
-            if maintenance_every and (bid + 1) % maintenance_every == 0:
-                compact_cluster_log(spark, out_root)
-
-    return process_batch
+    return _make_dedup_body(spark, out_root, "minhash", geometry, sign,
+                            maintain_clusters, n_doc_buckets, maintenance_every)
 
 
 def run_streaming_dedup(
@@ -874,21 +816,18 @@ def run_streaming_dedup(
     root on one scheme. ``maintenance_every=K`` compacts the cluster log
     every K batches from inside the foreachBatch body (bounded
     ``_apply_moves`` resolution on an arbitrarily long stream)."""
-    if scheme == "simhash":
-        body = make_dedup_batch(
-            spark, out_root, id_col, text_col, max_hamming, n_blocks,
-            maintain_clusters=maintain_clusters,
-            maintenance_every=maintenance_every,
-        )
-    elif scheme == "minhash":
-        body = make_minhash_dedup_batch(
-            spark, out_root, id_col, text_col,
-            n_bands=minhash_bands, n_rows=minhash_rows,
-            maintain_clusters=maintain_clusters,
-            maintenance_every=maintenance_every,
-        )
-    else:
-        raise ValueError(f"unknown dedup scheme {scheme!r}")
+    if scheme not in SCHEMES:
+        raise ValueError(f"unknown dedup scheme {scheme!r}; one of {sorted(SCHEMES)}")
+    body = make_dedup_batch(
+        spark, out_root, id_col, text_col, max_hamming, n_blocks,
+        maintain_clusters=maintain_clusters,
+        maintenance_every=maintenance_every,
+    ) if scheme == "simhash" else make_minhash_dedup_batch(
+        spark, out_root, id_col, text_col,
+        n_bands=minhash_bands, n_rows=minhash_rows,
+        maintain_clusters=maintain_clusters,
+        maintenance_every=maintenance_every,
+    )
     if schema is None:
         schema = spark.read.parquet(source_dir).schema
     stream = (

@@ -22,11 +22,9 @@ Store layout (the dedup_stream signature-table pattern):
 * ``seg_fps/batch_id=K/fb=B`` — (doc, ws, we, fp) span fingerprints
   (stride windows or content-defined chunks, per ``scheme``),
   partitioned by arrival batch and fingerprint bucket
-  fb = first-16-bits-of-fp mod ``n_fp_buckets``. The per-batch probe lists
-  the fb buckets its OWN fingerprints hash into (a bounded driver read of
-  <= n_fp_buckets values) and partition-prunes the corpus scan to exactly
-  those — per-batch read cost tracks |batch| x corpus/n_fp_buckets. Size
-  n_fp_buckets ~ the corpus partition count at deployment.
+  fb = first-16-bits-of-fp mod ``n_fp_buckets``. The per-batch probe reads
+  only the fb buckets its OWN fingerprints hash into (io.prior_partitions).
+  Size n_fp_buckets ~ the corpus partition count at deployment.
 * ``seg_spans/batch_id=K`` — the merged duplicate spans detected for batch
   K's docs: (doc_id, dup_of, span_start, span_end, n_windows).
 
@@ -37,9 +35,8 @@ partitions. The fingerprint store IS the whole state — no derived index to
 rebuild on restart.
 
 Skew: the corpus side collapses to ONE canonical-owner row per fingerprint
-via groupBy-min BEFORE the probe join (partial agg — a boilerplate
-fingerprint held by 10^7 earlier docs costs one row, the segment_dup_spans
-canon rule), so the join is |batch windows| x 1 per matching fp.
+before the probe join (``_first_arrival_dups``, the segment_dup_spans canon
+rule), so the join is |batch windows| x 1 per matching fp.
 """
 
 from __future__ import annotations
@@ -58,6 +55,7 @@ from ..io import (
     geometry_guard,
     has_parquet,
     parallel_actions,
+    prior_partitions,
     require_local,
     write_partitioned,
 )
@@ -81,6 +79,23 @@ def _fb(col, n_fp_buckets: int):
         F.conv(F.substring(col, 1, 4), 16, 10).cast("bigint"),
         F.lit(n_fp_buckets),
     ).cast("int")
+
+
+def _first_arrival_dups(spark: SparkSession, fp_path: str, fps: DataFrame,
+                       bid: int) -> DataFrame:
+    """The rows of batch ``bid``'s fingerprints ``fps`` (doc, fp, batch_id,
+    fb, ...) that an EARLIER arrival also holds, with ``o`` = the canonical
+    owner: min (batch_id, doc) over the prior store rows and this batch. A
+    groupBy partial agg, so a fingerprint held by 10^7 earlier docs reaches
+    the join as one row."""
+    corpus = fps.select("doc", "fp", "batch_id")
+    prior = prior_partitions(spark, fp_path, fps, "fb", bid)
+    if prior is not None:
+        corpus = prior.select("doc", "fp", "batch_id").unionByName(corpus)
+    owner = corpus.groupBy("fp").agg(
+        F.min(F.struct("batch_id", "doc")).alias("o")
+    )
+    return fps.join(owner, "fp").filter(F.struct("batch_id", "doc") > F.col("o"))
 
 
 def make_segment_dedup_batch(spark: SparkSession, out_root: str,
@@ -155,44 +170,14 @@ def make_segment_dedup_batch(spark: SparkSession, out_root: str,
                 "fp",
             )
         fps = (
-            raw
+            raw.withColumnRenamed("doc_id", "doc")
             .withColumn("batch_id", F.lit(bid))
             .withColumn("fb", _fb(F.col("fp"), n_fp_buckets))
             .localCheckpoint()
         )
-        # bounded driver read: at most n_fp_buckets values
-        touched = [r["fb"] for r in fps.select("fb").distinct().collect()]
-        if has_parquet(fp_path):
-            prior = (
-                spark.read.parquet(fp_path)
-                .filter((F.col("batch_id") < bid) & F.col("fb").isin(touched))
-                .select("doc", "ws", "we", "fp", "batch_id")
-            )
-            corpus = prior.unionByName(
-                fps.select(
-                    F.col("doc_id").alias("doc"), "ws", "we", "fp", "batch_id"
-                )
-            )
-        else:
-            corpus = fps.select(
-                F.col("doc_id").alias("doc"), "ws", "we", "fp", "batch_id"
-            )
-        # canonical owner per fp = earliest arrival (batch, doc) — groupBy
-        # partial agg, skew-proof (one row per fp reaches the join)
-        owner = corpus.groupBy("fp").agg(
-            F.min(F.struct("batch_id", "doc")).alias("o")
-        )
-        hits = (
-            fps.join(owner, "fp")
-            .filter(
-                F.struct(
-                    F.col("batch_id"), F.col("doc_id").alias("doc")
-                )
-                > F.col("o")
-            )
-            .select(
-                "doc_id", F.col("o.doc").alias("dup_of"), "ws", "we",
-            )
+        hits = _first_arrival_dups(spark, fp_path, fps, bid).select(
+            F.col("doc").alias("doc_id"), F.col("o.doc").alias("dup_of"),
+            "ws", "we",
         )
         if scheme == "stride":
             run = F.expr(f"ws div {stride}") - F.row_number().over(
@@ -222,8 +207,7 @@ def make_segment_dedup_batch(spark: SparkSession, out_root: str,
 
         def _write_fps():
             write_partitioned(
-                fps.select("doc_id", "ws", "we", "fp", "batch_id", "fb")
-                .withColumnRenamed("doc_id", "doc")
+                fps.select("doc", "ws", "we", "fp", "batch_id", "fb")
                 .repartition(n_fp_buckets, "fb"),
                 fp_path, "batch_id", "fb")
 

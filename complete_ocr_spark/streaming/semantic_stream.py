@@ -46,7 +46,14 @@ import os
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions.similarity import SRP_SEED, cosine, srp_hyperplanes
-from ..io import geometry_guard, has_parquet, require_local, write_partitioned
+from ..io import (
+    geometry_guard,
+    has_parquet,
+    prior_partitions,
+    require_local,
+    write_partitioned,
+)
+from .dedup_stream import _doc_bucket, _earlier_pairs
 
 N_VALUE_BUCKETS = 16
 N_DOC_BUCKETS = 16
@@ -120,50 +127,25 @@ def make_semantic_dedup_batch(spark: SparkSession, out_root: str,
                                      F.lit(n_value_buckets)).cast("int"))
             .localCheckpoint()  # feeds probe, within-join, band write
         )
-        touched = [r["vb"] for r in keys.select("vb").distinct().collect()]
-        corpus_keys = keys
-        if has_parquet(band_path):
-            corpus_keys = corpus_keys.unionByName(
-                spark.read.parquet(band_path)
-                .filter((F.col("batch_id") < bid) & F.col("vb").isin(touched))
-                .select("doc", "tbl", "bucket", "batch_id", "vb")
-            )
-        n, c = keys.alias("n"), corpus_keys.alias("c")
-        earlier = (F.col("c.batch_id") < F.col("n.batch_id")) | (
-            (F.col("c.batch_id") == F.col("n.batch_id"))
-            & (F.col("c.doc") < F.col("n.doc"))
-        )
+        prior = prior_partitions(spark, band_path, keys, "vb", bid)
+        corpus_keys = keys if prior is None else keys.unionByName(prior)
         cands = (
-            n.join(
-                c,
-                (F.col("n.tbl") == F.col("c.tbl"))
-                & (F.col("n.bucket") == F.col("c.bucket"))
-                & earlier,
-            )
-            .select(
-                F.col("n.doc").alias("doc"),
-                F.col("c.doc").alias("dup_of"),
-                F.col("c.batch_id").alias("dup_batch"),
-            )
+            _earlier_pairs(keys, corpus_keys, ("tbl", "bucket"))
+            .drop("batch_id")
             .distinct()  # a true pair collides in up to n_tables tables
             .localCheckpoint()
         )
         # db-pruned vector fetch for the earlier side; the batch side's
         # vectors ride the (batch-sized) localCheckpointed frame
-        cand_db = cands.select(
-            F.pmod(F.xxhash64("dup_of"), F.lit(n_doc_buckets)).cast("int")
-            .alias("db")).distinct()
-        touched_db = [r["db"] for r in cand_db.collect()]
         earlier_vecs = batch.select(F.col("doc").alias("dup_of"),
                                     F.col("v").alias("v2"))
-        if has_parquet(vec_path) and touched_db:
-            earlier_vecs = earlier_vecs.unionByName(
-                spark.read.parquet(vec_path)
-                .filter((F.col("batch_id") < bid)
-                        & F.col("db").isin(touched_db))
-                .select(F.col("doc").alias("dup_of"),
-                        F.col("v").alias("v2"))
-            )
+        prior_vecs = prior_partitions(
+            spark, vec_path,
+            cands.select(_doc_bucket("dup_of", n_doc_buckets).alias("db")),
+            "db", bid)
+        if prior_vecs is not None:
+            earlier_vecs = earlier_vecs.unionByName(prior_vecs.select(
+                F.col("doc").alias("dup_of"), F.col("v").alias("v2")))
         matches = (
             cands
             .join(batch.select(F.col("doc"), F.col("v").alias("v1")), "doc")
@@ -178,8 +160,7 @@ def make_semantic_dedup_batch(spark: SparkSession, out_root: str,
                           "batch_id", "vb")
         write_partitioned(
             batch.withColumn("batch_id", F.lit(bid))
-            .withColumn("db", F.pmod(F.xxhash64("doc"),
-                                     F.lit(n_doc_buckets)).cast("int"))
+            .withColumn("db", _doc_bucket("doc", n_doc_buckets))
             .repartition(n_doc_buckets, "db"),
             vec_path, "batch_id", "db")
         for frame, path in ((matches, pair_path), (flags, flag_path)):
@@ -193,12 +174,13 @@ def make_semantic_dedup_batch(spark: SparkSession, out_root: str,
 def read_semantic_pairs(spark: SparkSession, out_root: str,
                         id_type: str = "bigint") -> DataFrame:
     """All verified pairs so far: (doc, dup_of, dup_batch, cos, batch_id).
-    Empty-frame fallback keeps bootstrap reads total."""
+    Empty-frame fallback keeps bootstrap reads total; its int batch columns
+    are what a real read infers, so consumers see one schema."""
     pair_path = semantic_paths(out_root)[2]
     if not has_parquet(pair_path):
         return spark.createDataFrame(
-            [], f"doc {id_type}, dup_of {id_type}, dup_batch bigint, "
-                f"cos double, batch_id bigint")
+            [], f"doc {id_type}, dup_of {id_type}, dup_batch int, "
+                f"cos double, batch_id int")
     return spark.read.parquet(pair_path)
 
 
@@ -207,5 +189,5 @@ def read_semantic_flags(spark: SparkSession, out_root: str,
     """Docs with a strictly-earlier verified match: (doc, batch_id)."""
     flag_path = semantic_paths(out_root)[3]
     if not has_parquet(flag_path):
-        return spark.createDataFrame([], f"doc {id_type}, batch_id bigint")
+        return spark.createDataFrame([], f"doc {id_type}, batch_id int")
     return spark.read.parquet(flag_path)

@@ -30,34 +30,18 @@ def test_pipeline_output_offsets_dense(spark, docs_df):
         assert offs == list(range(len(offs)))
 
 
-def test_jvm_text_path_equals_fused_kernel(spark, docs_df):
-    """The Catalyst text branch (functions.stripexpr) is semantics-identical
-    to the Python strip kernel — the documented alternative stays correct."""
-    def canon(df):
-        return {r["doc_id"]: [tuple(s) for s in r["spans"]] for r in df.collect()}
-
-    assert canon(run_extraction(spark, docs_df, text_path="jvm")) == canon(
-        run_extraction(spark, docs_df, text_path="python")
-    )
-
-
-def test_jvm_text_path_counts_tab_edged_anchors_like_python(spark):
+def test_catalyst_link_chars_counts_tab_edged_anchors_like_python(spark):
     """ADVICE r2: Spark trim strips only ASCII spaces, so anchor text with
     leading/trailing tab/newline must be whitespace-collapsed BEFORE the trim
-    or the JVM link-density count drifts from len(" ".join(m.split()))."""
-    from complete_ocr_spark.schemas import DOC_SCHEMA
+    or the Catalyst link-character count (functions.stripexpr._link_chars,
+    used by q_strip_text_blocks) drifts from the Python kernel's
+    len(" ".join(m.split()))."""
+    from pyspark.sql import functions as F
 
-    # plain = "aa foo bar bb cc dd ee x" (24 chars); python counts the anchor
-    # as 7 chars (7/24 = 0.29, kept) while trim-before-collapse counted 9
-    # (9/24 = 0.375, dropped) — the fixture flips on the 0.33 gate
+    from complete_ocr_spark.functions.stripexpr import _link_chars
+
+    # python counts the anchor as 7 chars; trim-before-collapse counted 9
     block = 'aa <a href="x">\tfoo bar\n</a> bb cc dd ee x'
-    rows = [("t1", [("text", block, None, 0)])]
-    df = spark.createDataFrame(rows, schema=DOC_SCHEMA)
-
-    def canon(out):
-        return {r["doc_id"]: [tuple(s) for s in r["spans"]] for r in out.collect()}
-
-    jvm = canon(run_extraction(spark, df, text_path="jvm"))
-    py = canon(run_extraction(spark, df, text_path="python"))
-    assert jvm == py
-    assert len(py["t1"]) == 1  # density exactly at the 0.33 boundary: kept
+    got = spark.createDataFrame([(block,)], "block string").select(
+        _link_chars(F.col("block"))).head()[0]
+    assert got == len(" ".join("\tfoo bar\n".split())) == 7

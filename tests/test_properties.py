@@ -2,8 +2,6 @@
 
 from __future__ import annotations
 
-import pytest
-
 from complete_ocr_spark.oracle import extract_document
 from complete_ocr_spark.pipeline import run_extraction
 from complete_ocr_spark.schemas import DOC_SCHEMA
@@ -46,14 +44,13 @@ def test_mega_doc_extracts_exactly(spark):
     assert offs == list(range(len(offs)))
 
 
-@pytest.mark.parametrize("text_path", ["python", "jvm"])
-def test_degenerate_docs_stay_present_with_empty_spans(spark, text_path):
-    """Both text paths: empty/null/unknown/all-boilerplate docs must yield a
-    PRESENT output row with spans=[] (seed-union), never vanish or crash."""
+def test_degenerate_docs_stay_present_with_empty_spans(spark):
+    """Empty/null/unknown/all-boilerplate docs must yield a PRESENT output
+    row with spans=[] (seed-union), never vanish or crash."""
     df = spark.createDataFrame(DEGENERATE_DOCS, DOC_SCHEMA)
     out = {
         r["doc_id"]: [tuple(s) for s in r["spans"]]
-        for r in run_extraction(spark, df, text_path=text_path).collect()
+        for r in run_extraction(spark, df).collect()
     }
     assert out == {doc_id: [] for doc_id, _ in DEGENERATE_DOCS}
 

@@ -30,6 +30,11 @@ def _flags(spark, out_root):
     }
 
 
+def _sidecar(out_root):
+    with open(os.path.join(out_root, "_dedup_geometry.json")) as f:
+        return f.read()
+
+
 def _run(spark, src, out_root, ckpt):
     q = run_streaming_dedup(
         spark, source_dir=src + "/*", out_root=out_root,
@@ -106,6 +111,7 @@ def test_band_index_probe_is_partition_pruned(spark, tmp_path):
 
     from complete_ocr_spark.streaming.dedup_stream import _bands
     from complete_ocr_spark.functions.dedup import simhash64
+    from complete_ocr_spark.io import prior_partitions
 
     src_rows = [(i, f"corpus document number {i} with words {i % 7}") for i in range(1, 40)]
     out_root = str(tmp_path / "out")
@@ -117,9 +123,7 @@ def test_band_index_probe_is_partition_pruned(spark, tmp_path):
     sigs = simhash64(new, "doc_id", "text").withColumn("batch_id", F.lit(1))
     nb = _bands(sigs, 4, 3).withColumn("vb", F.pmod("value", F.lit(16)).cast("int"))
     touched = [r["vb"] for r in nb.select("vb").distinct().collect()]
-    pruned = spark.read.parquet(band_path).filter(
-        (F.col("batch_id") < 1) & F.col("vb").isin(touched)
-    )
+    pruned = prior_partitions(spark, band_path, nb, "vb", 1)
     plan = pruned._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan and "vb" in plan.split("PartitionFilters")[1][:200], plan
     # pruned read is a strict subset of the corpus partitions when the batch
@@ -127,6 +131,30 @@ def test_band_index_probe_is_partition_pruned(spark, tmp_path):
     n_all = spark.read.parquet(band_path).select("vb").distinct().count()
     if len(touched) < n_all:
         assert pruned.select("vb").distinct().count() <= len(touched)
+
+
+def test_prior_partitions_reads_earlier_touched_buckets_only(spark, tmp_path):
+    """The shared prior-batch probe (io.prior_partitions) returns exactly
+    the store rows with batch_id < bid in a bucket the new frame touches,
+    and both bounds are partition filters of its scan; a store with no
+    files yet gives None."""
+    from complete_ocr_spark.io import prior_partitions, write_partitioned
+
+    path = str(tmp_path / "store")
+    assert prior_partitions(spark, path, None, "vb", 2) is None
+    rows = [(10 * b + v, b, v) for b in range(3) for v in range(4)]
+    write_partitioned(
+        spark.createDataFrame(rows, "doc bigint, batch_id int, vb int"),
+        path, "batch_id", "vb")
+    new = spark.createDataFrame([(1,), (3,), (3,)], "vb int")
+    prior = prior_partitions(spark, path, new, "vb", 2)
+    assert sorted(tuple(r) for r in prior.select("doc", "batch_id", "vb").collect()) == [
+        (1, 0, 1), (3, 0, 3), (11, 1, 1), (13, 1, 3)]
+    plan = prior._jdf.queryExecution().executedPlan().toString()
+    scans = plan.split("FileScan parquet")[1:]
+    assert len(scans) == 1, plan
+    filters = scans[0].split("PartitionFilters:")[1].split("]")[0]
+    assert "batch_id" in filters and "vb" in filters, plan
 
 
 def test_geometry_change_on_existing_index_is_refused(spark, tmp_path):
@@ -137,6 +165,10 @@ def test_geometry_change_on_existing_index_is_refused(spark, tmp_path):
     out_root = str(tmp_path / "out")
     pb4 = make_dedup_batch(spark, out_root, n_blocks=4)
     pb4(spark.createDataFrame([(1, BASE)], SCHEMA), 0)
+    # the sidecar's exact bytes: stores written by earlier code must resume
+    assert _sidecar(out_root) == (
+        '{"n_blocks": 4, "max_hamming": 3, "n_value_buckets": 16, '
+        '"n_doc_buckets": 16}')
     pb8 = make_dedup_batch(spark, out_root, n_blocks=8)
     with pytest.raises(ValueError, match="geometry mismatch"):
         pb8(spark.createDataFrame([(2, BASE)], SCHEMA), 1)
@@ -313,6 +345,9 @@ def test_minhash_streaming_dedup_cross_batch(spark, tmp_path):
     pb = make_minhash_dedup_batch(spark, out_root)
     pb(spark.createDataFrame([(1, base), (2, far)], SCHEMA), 0)
     assert _flags(spark, out_root) == {}
+    assert _sidecar(out_root) == (
+        '{"scheme": "minhash", "n_bands": 4, "n_rows": 2, '
+        '"n_value_buckets": 16, "n_doc_buckets": 16}')
 
     pb(spark.createDataFrame([(3, near), (4, base)], SCHEMA), 1)
     got = {
@@ -785,6 +820,9 @@ def test_streaming_dedup_runs_on_media_signatures(spark, tmp_path):
         [("img-base", 64, 64, 1, base),
          ("img-other", 48, 80, 1, keystream("other", 48 * 80))], mschema), 0)
     assert _flags(spark, out_root) == {}
+    assert _sidecar(out_root) == (
+        '{"n_blocks": 8, "max_hamming": 3, "n_value_buckets": 16, '
+        '"scheme": "simhash-sig:media_sig_fn", "n_doc_buckets": 16}')
     pb(spark.createDataFrame(
         [("img-reenc", 64, 64, 1, bytes(reenc)),
          ("img-third", 32, 96, 1, keystream("third", 32 * 96))], mschema), 1)
@@ -832,3 +870,61 @@ def test_geometry_guard_refuses_signature_scheme_mixes(spark, tmp_path):
     pb_text2 = make_dedup_batch(spark, root2)
     with pytest.raises(ValueError, match="geometry"):
         pb_text2(spark.createDataFrame([(2, BASE)], SCHEMA), 1)
+
+
+def test_empty_store_readers_type_like_a_real_read(spark, tmp_path):
+    """Every streaming store reader returns ONE schema: its typed empty frame
+    (no batch has written files yet) has the dtypes a real read infers
+    after one batch (int batch columns: F.lit(bid) and partition inference
+    are both IntegerType)."""
+    from complete_ocr_spark.streaming.decon_stream import (
+        make_decon_batch,
+        read_decon_incr,
+    )
+    from complete_ocr_spark.streaming.dedup_stream import (
+        make_minhash_dedup_batch,
+    )
+    from complete_ocr_spark.streaming.segment_stream import (
+        make_segment_dedup_batch,
+        read_segment_spans,
+    )
+    from complete_ocr_spark.streaming.semantic_stream import (
+        make_semantic_dedup_batch,
+        read_semantic_flags,
+        read_semantic_pairs,
+    )
+
+    long_text = " ".join(f"w{i}" for i in range(30))
+    docs = spark.createDataFrame([(1, long_text), (2, long_text)], SCHEMA)
+    vecs = spark.createDataFrame(
+        [(1, [1.0, 0.5, 0.0, 0.25]), (2, [1.0, 0.5, 0.0, 0.25])],
+        "doc_id bigint, embedding array<double>")
+    bench = spark.createDataFrame([(9, long_text)], SCHEMA)
+
+    def root(name):
+        return str(tmp_path / name)
+
+    cases = [
+        (lambda: make_dedup_batch(spark, root("sim"), maintain_clusters=False),
+         docs, lambda: read_flags(spark, root("sim"))),
+        (lambda: make_minhash_dedup_batch(spark, root("min"),
+                                          maintain_clusters=False),
+         docs, lambda: read_flags(spark, root("min"), scheme="minhash")),
+        (lambda: make_segment_dedup_batch(spark, root("seg")),
+         docs, lambda: read_segment_spans(spark, root("seg"))),
+        (lambda: make_semantic_dedup_batch(spark, root("sem"), dim=4),
+         vecs, lambda: (read_semantic_pairs(spark, root("sem")),
+                        read_semantic_flags(spark, root("sem")))),
+        (lambda: make_decon_batch(spark, root("dec"), bench, n=5),
+         docs, lambda: read_decon_incr(spark, root("dec"))),
+    ]
+    for make, batch, read in cases:
+        def frames():
+            out = read()
+            return out if isinstance(out, tuple) else (out,)
+
+        empty = [f.dtypes for f in frames()]
+        make()(batch, 0)
+        real = frames()
+        assert all(f.count() > 0 for f in real)  # files exist: a real read
+        assert empty == [f.dtypes for f in real]
