@@ -99,6 +99,15 @@ def build_spark(app_name: str = "complete_ocr_spark", master: str | None = None,
         .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version",
                 "2")
         .config("spark.ui.enabled", "false")
+        # generated-class cache (a static, JVM-wide conf). One incremental
+        # curation batch has more distinct generated classes than the
+        # default 100 entries, so every batch evicted and recompiled its
+        # own: ~250 Janino compilations per steady batch (~1.9 s of driver
+        # compile plus ~5.7 CPU-s of JIT), 260 for a re-delivered identical
+        # batch. At 2,000 a re-delivered batch compiles 4 and a steady new
+        # one ~40 (plans whose literals change per batch). Entries are
+        # small (one compiled class each)
+        .config("spark.sql.codegen.cache.maxEntries", "2000")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
         # ParallelGC: the default G1 degrades monotonically across repeated
         # heavy allocation bursts here (nested-array building at 32 mutator

@@ -123,8 +123,27 @@ def parallel_actions(*thunks) -> None:
 def write_partitioned(df: DataFrame, path: str, *cols: str) -> None:
     """The one partitioned store write: ``df`` replaces exactly the
     partitions of ``path`` (by ``cols``) it holds rows for, so a re-run or
-    a re-delivered micro-batch is idempotent. The caller sets the file
-    layout (``repartition(n, key)`` / ``coalesce(1)``) on ``df``.
+    a re-delivered micro-batch is idempotent.
+
+    The caller sets the file layout on ``df``, by the kind of store:
+
+    - a per-micro-batch store with a bucket key (``fb``/``vb``/``db``/``tb``
+      in ``streaming/``) is written ``repartition(key)``: each key value
+      lands in one task, so one file per partition, and AQE sizes the tasks
+      to the data, where ``repartition(n, key)`` starts n tasks whatever the
+      batch size;
+    - a store partitioned by ``batch_id`` alone is written ``coalesce(1)``,
+      one file per batch: the curate runner's 10,000-doc batches write their
+      training partition in ~0.2 s that way on a 4-core host, against ~0.9 s
+      for a 32-bucket fan-out; ROADMAP lists the stores whose batches are
+      not bounded;
+    - a batch table (``TableIO``, ``curate_io``, ``prep_io``, the streaming
+      extraction sink) is written ``repartition(n_buckets, "bucket")``, one
+      task per bucket with every core busy. AQE folds a
+      ``repartition("bucket")`` of 101 extracted docs into one task that
+      writes all 32 files in turn, and the perfbench ``extract`` op ran
+      ~11 % slower that way (median of 7 pairs, ``local[4]``, 4-core host).
+      The bucket lineage's few collected rows are written as they are.
 
     Dynamic overwrite is a per-write option, NOT ``spark.conf.set``:
     foreachBatch runs under a cloned micro-batch session whose conf

@@ -31,11 +31,16 @@ per batch k, in the batch-curation tier order:
    stores and the ONLINE CLUSTER LOG under ``dedup/``); this batch's flags
    are the batch-time ``near_dup`` evidence.
 
-Per batch the runner writes ``audit/batch_id=K/bucket=B`` (every batch doc
-with its gate signals + batch-time decision), ``training/batch_id=K/
-bucket=B`` (kept docs, duplicated spans stripped) and
-``curated_lineage/batch_id=K/bucket=B`` — the curate_io conventions,
-batch-partitioned so re-delivery overwrites exactly its own rows.
+Per batch the runner writes ``audit/batch_id=K`` (every batch doc with its
+gate signals + batch-time decision), ``training/batch_id=K`` (kept docs,
+duplicated spans stripped) and ``curated_lineage/batch_id=K`` (one row per
+doc bucket) — the curate_io schemas, with ``bucket`` a data column rather
+than a partition: the stream's unit of resume and re-delivery is the
+batch, so ``batch_id`` alone keys the idempotent dynamic overwrite, and
+each batch is one file (``coalesce(1)``, io.write_partitioned) where a
+``bucket=B`` fan-out wrote up to 3 x n_buckets tiny files per batch. The
+layout is pinned in the geometry sidecar (``store_layout``), so a store
+written with the older ``batch_id=K/bucket=B`` layout refuses loudly.
 
 PROMOTION (the q_dup_clusters_incr pattern, curate-shaped): batch-time
 near-dup flags are pairwise "has a strictly-earlier match" evidence, but
@@ -111,6 +116,7 @@ from ..io import (
     write_partitioned,
 )
 from .dedup_stream import (
+    dedup_paths,
     make_dedup_batch,
     read_cluster_labels,
     read_flags,
@@ -187,6 +193,10 @@ def make_curate_batch(spark: SparkSession, out_root: str,
     paths = curate_stream_paths(out_root)
     geometry = {
         "kind": "curate-stream",
+        # 2: audit/training/curated_lineage partitioned by batch_id only
+        # (module doc); an unversioned store has bucket= partitions, which
+        # a read of this layout would fail on much later
+        "store_layout": 2,
         "languages": languages, "min_quality": min_quality,
         "max_dup_line_frac": max_dup_line_frac,
         "max_top_bigram_frac": max_top_bigram_frac,
@@ -345,8 +355,8 @@ def make_curate_batch(spark: SparkSession, out_root: str,
         _surv = {}
 
         def _write_fps():
-            write_partitioned(fps.repartition(n_fp_buckets, "fb"),
-                              paths["fps"], "batch_id", "fb")
+            write_partitioned(fps.repartition("fb"), paths["fps"],
+                              "batch_id", "fb")
 
         def _ck_surv():
             _surv["df"] = passed.join(
@@ -428,7 +438,7 @@ def make_curate_batch(spark: SparkSession, out_root: str,
                 batch_links.withColumn("batch_id", F.lit(bid)).coalesce(1),
                 paths["links"], "batch_id")
             new_refs = batch_links.select("media_ref").distinct()
-            media_sig_path = os.path.join(paths["media"], "sigs")
+            media_sig_path = dedup_paths(paths["media"])[0]
             if has_parquet(media_sig_path):
                 # strictly-earlier batches only: a re-delivered batch then
                 # recomputes the same new-media set (idempotent overwrite)
@@ -514,13 +524,13 @@ def make_curate_batch(spark: SparkSession, out_root: str,
         # (the training plan reads the audit/stripped CHECKPOINTS, not the
         # store) — overlap them; likewise the training-store write and the
         # lineage aggregation below (both read only checkpointed frames).
-        # All writes stay (batch_id, ...)-keyed dynamic overwrite, so crash/
-        # re-delivery semantics are unchanged by the overlap.
+        # All three stores are batch_id-keyed dynamic overwrite, one file
+        # per batch (module doc), so crash/re-delivery semantics are
+        # unchanged by the overlap.
         def _write_audit():
             write_partitioned(
-                audit.withColumn("batch_id", F.lit(bid))
-                .repartition(n_buckets, "bucket"),
-                paths["audit"], "batch_id", "bucket")
+                audit.withColumn("batch_id", F.lit(bid)).coalesce(1),
+                paths["audit"], "batch_id")
 
         # training: kept docs with their duplicated spans stripped (the one
         # strip pass above). May be EMPTY for an all-dropped batch — skip
@@ -545,18 +555,17 @@ def make_curate_batch(spark: SparkSession, out_root: str,
         def _write_training():
             if has_training:
                 write_partitioned(
-                    training.withColumn("batch_id", F.lit(bid))
-                    .repartition(n_buckets, "bucket"),
-                    paths["training"], "batch_id", "bucket")
+                    training.withColumn("batch_id", F.lit(bid)).coalesce(1),
+                    paths["training"], "batch_id")
 
         def _write_lineage():
             # lineage per (batch, bucket), computed from the checkpointed
-            # frames — fully distributed, <= n_buckets rows per batch
+            # frames — <= n_buckets rows per batch, bucket a data column
             lin = bucket_lineage(audit, training if has_training else None,
                                  id_col, "text_clean", "n_kept")
             write_partitioned(
                 lin.withColumn("batch_id", F.lit(bid)).coalesce(1),
-                paths["lineage"], "batch_id", "bucket")
+                paths["lineage"], "batch_id")
 
         parallel_actions(_write_training, _write_lineage)
 

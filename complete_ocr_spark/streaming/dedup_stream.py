@@ -464,7 +464,9 @@ def _update_clusters(spark: SparkSession, out_root: str, batch_docs: DataFrame,
         batch_docs = batch_docs.join(
             prior_roots.select("doc"), "doc", "left_anti"
         )
-    cc = connected_components(edges).localCheckpoint()
+    # no checkpoint: the fast path returns a driver-built local relation and
+    # the distributed path's labels are already checkpointed
+    cc = connected_components(edges)
     asg_new = (
         batch_docs.join(cc.select("doc", "cluster"), "doc", "left")
         .select("doc", F.coalesce("cluster", F.col("doc")).alias("label"))
@@ -472,8 +474,8 @@ def _update_clusters(spark: SparkSession, out_root: str, batch_docs: DataFrame,
         .withColumn("db", _doc_bucket("doc", n_doc_buckets))
     )
     def _write_asg():
-        write_partitioned(asg_new.repartition(n_doc_buckets, "db"), asg_path,
-                          "batch_id", "db")
+        write_partitioned(asg_new.repartition("db"), asg_path, "batch_id",
+                          "db")
 
     def _write_moves():
         if prior_roots is None:
@@ -485,15 +487,14 @@ def _update_clusters(spark: SparkSession, out_root: str, batch_docs: DataFrame,
             .select("src", F.col("cluster").alias("dst"))
             .distinct()
             .withColumn("batch_id", F.lit(bid))
-            # the emptiness probe below would otherwise compute the whole
-            # merge-detection subtree once and the write would recompute it
-            .localCheckpoint()
         )
-        if not mv.isEmpty():
-            write_partitioned(mv.coalesce(1), mov_path, "batch_id")
+        # written unprobed: a merge-free batch writes no partition, and
+        # every reader (_read_moves, compact_cluster_log) gates on
+        # has_parquet
+        write_partitioned(mv.coalesce(1), mov_path, "batch_id")
 
-    # independent writes (different stores; both plans read only the
-    # checkpointed cc/prior_roots/batch_docs frames) — overlap them; the
+    # independent writes (different stores; both plans read only cc and the
+    # checkpointed prior_roots/batch_docs frames) — overlap them; the
     # completion marker below stays strictly AFTER both (its ordering
     # contract), so crash semantics are unchanged
     parallel_actions(_write_asg, _write_moves)
@@ -603,8 +604,8 @@ def _make_dedup_body(spark: SparkSession, out_root: str, scheme: str,
         signature table, so resuming with an empty one would silently treat
         the corpus as empty and un-flag every cross-batch duplicate."""
         prior_sigs = spark.read.parquet(sig_path).filter(F.col("batch_id") < bid)
-        write_partitioned(_bands_vb(prior_sigs).repartition(n_value_buckets, "vb"),
-                          band_path, "batch_id", "vb")
+        write_partitioned(_bands_vb(prior_sigs).repartition("vb"), band_path,
+                          "batch_id", "vb")
 
     def _rebuild_cluster_log(backlog: list[int]) -> None:
         """The cluster log is behind the signature table (pre-cluster layout,
@@ -669,8 +670,7 @@ def _make_dedup_body(spark: SparkSession, out_root: str, scheme: str,
         # recorded via an explicit lit.
         writes = [
             lambda: write_partitioned(
-                new_bands.repartition(n_value_buckets, "vb"), band_path,
-                "batch_id", "vb"),
+                new_bands.repartition("vb"), band_path, "batch_id", "vb"),
             lambda: write_partitioned(
                 flags.withColumn("batch_id", F.lit(bid))  # restore post-agg
                 .coalesce(1), flag_path, "batch_id"),

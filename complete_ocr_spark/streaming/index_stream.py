@@ -116,8 +116,7 @@ def make_index_batch(spark: SparkSession, out_root: str,
             batch_df, id_col, text_col, n_buckets
         ).localCheckpoint()  # feeds the stats agg AND the store write
         write_partitioned(
-            pairs.withColumn("batch_id", F.lit(bid))
-            .repartition(n_buckets, "tb"),
+            pairs.withColumn("batch_id", F.lit(bid)).repartition("tb"),
             post_path, "batch_id", "tb")
         write_partitioned(
             pairs.groupBy("doc_id").agg(F.first("dl").alias("dl"))

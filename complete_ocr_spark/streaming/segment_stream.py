@@ -208,7 +208,7 @@ def make_segment_dedup_batch(spark: SparkSession, out_root: str,
         def _write_fps():
             write_partitioned(
                 fps.select("doc", "ws", "we", "fp", "batch_id", "fb")
-                .repartition(n_fp_buckets, "fb"),
+                .repartition("fb"),
                 fp_path, "batch_id", "fb")
 
         def _write_spans():

@@ -156,12 +156,11 @@ def make_semantic_dedup_batch(spark: SparkSession, out_root: str,
             .localCheckpoint()  # feeds flags AND the pair write
         )
         flags = matches.select("doc").distinct()
-        write_partitioned(keys.repartition(n_value_buckets, "vb"), band_path,
-                          "batch_id", "vb")
+        write_partitioned(keys.repartition("vb"), band_path, "batch_id", "vb")
         write_partitioned(
             batch.withColumn("batch_id", F.lit(bid))
             .withColumn("db", _doc_bucket("doc", n_doc_buckets))
-            .repartition(n_doc_buckets, "db"),
+            .repartition("db"),
             vec_path, "batch_id", "db")
         for frame, path in ((matches, pair_path), (flags, flag_path)):
             write_partitioned(

@@ -5,6 +5,10 @@ all-dropped batch edge, and the real readStream wiring."""
 
 from __future__ import annotations
 
+import glob
+import json
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -101,6 +105,37 @@ def test_prefix_equality_vs_batch_curation(spark, tmp_path):
     # lineage reconciles to the audit row count
     lin = spark.read.parquet(curate_stream_paths(root)["lineage"])
     assert lin.agg(F.sum("doc_count")).collect()[0][0] == len(seen)
+    _assert_store_layout(root, len(BATCHES))
+
+
+def _assert_store_layout(root, n_batches):
+    """The per-batch file layout: the three batch outputs hold one file per
+    batch_id partition with ``bucket`` a data column; the evidence stores
+    keep one file per (batch_id, bucket key) partition."""
+    from complete_ocr_spark.streaming.dedup_stream import (
+        cluster_paths,
+        dedup_paths,
+    )
+    from complete_ocr_spark.streaming.segment_stream import segment_paths
+
+    def n_files(d):
+        return len(glob.glob(os.path.join(d, "*.parquet")))
+
+    paths = curate_stream_paths(root)
+    for store in ("audit", "training", "lineage"):
+        for k in range(n_batches):
+            part = os.path.join(paths[store], f"batch_id={k}")
+            assert n_files(part) == 1, (store, k)
+            assert not glob.glob(os.path.join(part, "bucket=*")), (store, k)
+    for store, key in ((paths["fps"], "fb="),
+                       (segment_paths(paths["seg"])[0], "fb="),
+                       (dedup_paths(paths["dedup"])[2], "vb="),
+                       (cluster_paths(paths["dedup"])[0], "db=")):
+        parts = [d for d in glob.glob(os.path.join(store, "batch_id=*", "*"))
+                 if os.path.isdir(d)]
+        assert parts, store
+        assert all(os.path.basename(d).startswith(key) for d in parts), store
+        assert all(n_files(d) == 1 for d in parts), store
 
 
 def test_redelivery_and_restart_are_idempotent(spark, tmp_path):
@@ -129,6 +164,32 @@ def test_redelivery_and_restart_are_idempotent(spark, tmp_path):
     with pytest.raises(
             ValueError, match=r"curate-stream geometry mismatch.*min_quality"):
         bad(frames[0], 3)
+    # a store without the layout version (the older batch_id=K/bucket=B
+    # partitions) refuses loudly instead of failing at a later read
+    geo_path = os.path.join(root, "_curate_geometry.json")
+    with open(geo_path) as f:
+        geo = json.load(f)
+    del geo["store_layout"]
+    with open(geo_path, "w") as f:
+        json.dump(geo, f)
+    with pytest.raises(ValueError, match="store_layout"):
+        make_curate_batch(spark, root, **CURATE_KW)(frames[0], 3)
+
+
+def test_redelivered_batch_reuses_compiled_plans(spark, tmp_path):
+    """A re-delivered batch runs the plans its first delivery compiled, so
+    the session's generated-class cache must hold one batch's worth of
+    plans: with the default 100 entries every batch evicted its own and
+    recompiled ~250 classes."""
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    root = str(tmp_path / "ci_codegen")
+    pb = make_curate_batch(spark, root, **CURATE_KW)
+    for k, rows in enumerate(BATCHES[:2]):
+        pb(spark.createDataFrame(rows, SCHEMA), k)
+    before = codegen.METRIC_COMPILATION_TIME().getCount()
+    pb(spark.createDataFrame(BATCHES[1], SCHEMA), 1)
+    compiled = codegen.METRIC_COMPILATION_TIME().getCount() - before
+    assert compiled < 20, compiled
 
 
 def test_promotion_flips_bridged_keep_to_near_dup(spark, tmp_path):
@@ -437,6 +498,35 @@ def test_full_tier_restart_resumes_from_stores(spark, full_tier_run, tmp_path):
     seen = [r for b in run.batches for r in b]
     assert _full_incr_snapshot(spark, root) == _full_batch_snapshot(
         spark, seen, run.emb, run.media, run.links, run.kw)
+
+
+def test_media_signed_in_earlier_batch_is_not_resigned(spark, tmp_path):
+    """Doc 10 re-links m0, which batch 0 already signed. The batch-time
+    probe must find m0 in the media signature store and skip it: signed
+    again, m0 would match its own batch-0 signature and doc 10 would drop
+    as media_dup at batch time while the promoted view keeps it, i.e. a
+    drop -> keep move that promotion never makes."""
+    media = spark.createDataFrame(
+        [("m0", 64, 64, 1, _keystream("page", 64 * 64))],
+        "media_ref string, width int, height int, n_frames int, payload binary",
+    )
+    links = spark.createDataFrame(
+        [(0, "m0"), (10, "m0")], "doc_id bigint, media_ref string")
+    kw = dict(CURATE_KW, doc_media=links, media=media,
+              max_dup_media_frac=0.5, media_max_hamming=3, media_n_blocks=8)
+    root = str(tmp_path / "ci_media")
+    pb = make_curate_batch(spark, root, **kw)
+    pb(spark.createDataFrame([(0, GOOD)], SCHEMA), 0)
+    pb(spark.createDataFrame([(10, UNIQ2)], SCHEMA), 1)
+    cols = ("keep", "drop_reason", "dup_media_frac")
+    audit = spark.read.parquet(curate_stream_paths(root)["audit"])
+    at_batch = audit.filter("doc_id = 10").select(*cols).collect()
+    promoted = (read_curated_incr(spark, root).filter("doc_id = 10")
+                .select(*cols).collect())
+    assert [tuple(r) for r in at_batch] == [(True, None, 0.0)]
+    assert [tuple(r) for r in promoted] == [(True, None, 0.0)]
+    training = read_incr_training(spark, root).filter("batch_id = 1")
+    assert [r["doc_id"] for r in training.collect()] == [10]
 
 
 def test_model_gate_prefix_equality_and_geometry(spark, tmp_path):
